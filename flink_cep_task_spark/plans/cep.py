@@ -26,7 +26,6 @@ from flink_cep_task_spark.operators.windows import evaluate_windows
 from flink_cep_task_spark.rules import (
     Rule,
     compact_rule_list,
-    compact_rules,
     rules_df,
 )
 from flink_cep_task_spark.sources.tables import (
@@ -52,9 +51,8 @@ def evaluate_rules(spark: SparkSession, metrics: DataFrame, rules: list[Rule]) -
     inspecting it costs nothing and every session-free plan stays
     byte-identical to before.
     """
-    compacted = compact_rules(rules_df(spark, rules))
-    fanned = fanout_rules(metrics, compacted)
     active = compact_rule_list(rules)
+    fanned = fanout_rules(metrics, rules_df(spark, active))
     has_session = any(r.window_type == "session" for r in active)
     if not has_session:
         return evaluate_windows(fanned)

@@ -324,15 +324,7 @@ def q_live_streaming(
     )
     store = RuleFileStore(os.path.join(work, "rules.json"))
     for r in LIVE_STREAMING_RULES:
-        store.upsert({
-            "ruleId": r.rule_id, "windowType": r.window_type,
-            "windowMinutes": r.window_minutes,
-            "windowSlideMinute": r.window_slide_minutes,
-            "groupingKeyNames": list(r.grouping_keys),
-            "aggregatorFunctionType": r.agg_type,
-            "aggregateFieldName": r.agg_field,
-            "limitOperatorType": r.limit_op, "limit": float(r.limit),
-        })
+        store.upsert(r.to_wire())
 
     # ONE data trigger (data + pusher — see _events_stream_workdir); the
     # pusher-advanced watermark then drives Spark's no-data batch, where
@@ -422,14 +414,8 @@ def q_global_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work, n_parts = _events_stream_workdir(spark, sf_dir, "glob_cep_")
-    r = R_GLOBAL_MAX
     store = RuleFileStore(os.path.join(work, f"rules_glob_{uuid.uuid4().hex[:8]}.json"))
-    store.upsert({
-        "ruleId": r.rule_id, "windowType": r.window_type,
-        "groupingKeyNames": list(r.grouping_keys),
-        "aggregatorFunctionType": r.agg_type, "aggregateFieldName": r.agg_field,
-        "limitOperatorType": r.limit_op, "limit": float(r.limit),
-    })
+    store.upsert(R_GLOBAL_MAX.to_wire())
     metrics = metrics_stream_from_parquet(
         spark, os.path.join(work, "src"), METRIC_SCHEMA,
         max_files_per_trigger=n_parts + 1,
@@ -739,39 +725,12 @@ def q_first_event_null_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rules_from_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3/P4 through the correctness gate: raw wire JSON rule lines are
-    parsed IN-PLAN (parse_rule_lines_df — symbolic ops, bare-string keys,
-    bad-line drop), compacted, and evaluated against events. The oracle is
-    generated from the Python parser's view of the same lines, so the two
-    parsers and the evaluation are pinned against each other."""
-    from pyspark.sql import functions as F
-
-    from flink_cep_task_spark.operators.fanout import fanout_rules
-    from flink_cep_task_spark.operators.windows import evaluate_windows
-    from flink_cep_task_spark.rules import compact_rules, parse_rule_lines_df
-
-    lines_df = spark.createDataFrame([(l,) for l in WIRE_RULE_LINES], ["value"])
-    rules = compact_rules(parse_rule_lines_df(lines_df))
-    metrics = events_to_metrics(widen_small_scan(load_table(spark, sf_dir, "events")))
-    fanned = fanout_rules(metrics, rules)
-    # session routing mirrors plans/cep.evaluate_rules: the python twin's
-    # view of the same lines decides (plan-shape decision; both parsers
-    # are pinned identical by tests/test_rules_wire.py)
-    from flink_cep_task_spark.rules import compact_rule_list
-
-    has_session = any(
-        r.window_type == "session"
-        for r in compact_rule_list(parse_rule_lines(WIRE_RULE_LINES))
-    )
-    if not has_session:
-        return evaluate_windows(fanned)
-    from flink_cep_task_spark.operators.windows import evaluate_session_windows
-
-    return evaluate_windows(
-        fanned.filter(F.col("window_type") != "session")
-    ).unionByName(
-        evaluate_session_windows(fanned.filter(F.col("window_type") == "session"))
-    )
+    """P3/P4 through the correctness gate: raw wire JSON rule lines
+    (symbolic and enum-name ops, bare-string keys, unknown window types,
+    bad-line drop) parsed by parse_rule_lines and evaluated against
+    events. The oracle is generated from the same parse, so the gate pins
+    the evaluation of what the parser accepted."""
+    return evaluate_rules_on_events(spark, sf_dir, parse_rule_lines(WIRE_RULE_LINES))
 
 
 def q_jsonline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

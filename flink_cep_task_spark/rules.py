@@ -16,7 +16,8 @@ rule captured per group, CEPEngine.java:55-64).
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+from decimal import ROUND_HALF_UP, Decimal, DecimalException
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,8 +34,8 @@ from flink_cep_task_spark.schemas import (
 # deserializes LimitOperatorType by valueOf, and the reference's own
 # sample rule (resources/rules:1) says "GREATER" — while the symbolic
 # forms come from LimitOperatorType.fromString (Rule.java:99-107, unused
-# by the reference's ingest but part of its declared vocabulary). Both
-# parsers accept both and normalize to the symbol.
+# by the reference's ingest but part of its declared vocabulary).
+# Rule.from_wire accepts both and normalizes to the symbol.
 LIMIT_OP_NAMES = {
     "EQUAL": "=",
     "NOT_EQUAL": "!=",
@@ -42,6 +43,22 @@ LIMIT_OP_NAMES = {
     "LESS_EQUAL": "<=",
     "GREATER": ">",
     "LESS": "<",
+}
+
+# internal RULE_SCHEMA column -> reference wire field (Rule.java:12-24);
+# `seq` is this engine's explicit changelog position
+WIRE_NAMES = {
+    "rule_id": "ruleId",
+    "rule_state": "ruleState",
+    "window_type": "windowType",
+    "window_minutes": "windowMinutes",
+    "window_slide_minutes": "windowSlideMinute",
+    "grouping_keys": "groupingKeyNames",
+    "agg_type": "aggregatorFunctionType",
+    "agg_field": "aggregateFieldName",
+    "limit_op": "limitOperatorType",
+    "limit": "limit",
+    "seq": "seq",
 }
 
 
@@ -91,48 +108,43 @@ class Rule:
 
     @classmethod
     def from_wire(cls, doc: dict, seq: int = 0) -> "Rule":
-        """Parse one reference-format JSON rule document (Rule.java:12-24).
+        """Parse one reference-format JSON rule document (Rule.java:12-24) —
+        the engine's ONE wire parser; every rule is validated here before
+        any plan sees it (RuleFileStore validates on write).
 
         Lenient like the reference's fastjson parse (CEPTaskRunner.java:54-56):
         groupingKeyNames may be an array or a bare scalar; windowType other
         than tumbling/sliding/session means a global window
         (CEPEngine.java:75-81 — "session" is this engine's extension).
         An explicit "seq" in the doc overrides the caller's (file-based rule
-        stores carry it; socket arrival order supplies it otherwise) — kept
-        in lockstep with parse_rule_lines_df.
+        stores carry it; socket arrival order supplies it otherwise).
 
-        TYPE discipline is strict and shared with the DataFrame twin
-        (pinned by tests/test_rules_fuzz.py): integer fields (ruleId,
-        windowMinutes, windowSlideMinute, seq) must be JSON integers, the
+        TYPE discipline is strict (pinned by tests/test_rules_fuzz.py):
+        integer fields (ruleId, windowMinutes, windowSlideMinute, seq) must
+        be JSON integers in the rule table's INT32 (seq: INT64) range, the
         limit must be a finite number (or numeric string) representable
-        as DECIMAL(18,4), and groupingKeyNames may not be an object or
-        contain nested containers — any violation drops the WHOLE rule,
-        like a fastjson type mismatch fails the whole document
+        as DECIMAL(18,4), and groupingKeyNames may not be an object — any
+        violation raises ValueError and drops the WHOLE rule, like a
+        fastjson type mismatch fails the whole document
         (CEPTaskRunner.java:54-56's parse-error→drop path). One deliberate
         divergence: numeric STRINGS for integer fields ("windowMinutes":
-        "5") are dropped, not coerced — both engine parsers agree, and
-        the reference never emits them.
+        "5") are dropped, not coerced — the reference never emits them.
         """
 
-        # a non-object JSON value ("5", "[1,2]") is not a rule document —
-        # from_json yields null for it in the DataFrame twin (this used
-        # to escape as AttributeError, crashing parse_rule_lines)
         if not isinstance(doc, dict):
             raise ValueError(f"rule document must be a JSON object, got {doc!r}")
-        # explicit JSON null ≡ absent, matching the DataFrame twin's
-        # per-field coalesce defaults
+        # explicit JSON null ≡ absent
         doc = {k: v for k, v in doc.items() if v is not None}
+        if "ruleId" not in doc:
+            raise ValueError("rule document has no ruleId")
 
         def as_str(v) -> str:
-            # JSON-ish string form, mirroring from_json's string coercion
+            # JSON-ish string form of a scalar
             if isinstance(v, bool):
                 return "true" if v else "false"
             return str(v)
 
         def req_int(v, name: str, bits: int = 32):
-            # the DataFrame twin's wire schema types these INT32 (seq:
-            # INT64); an overflowing value nulls the typed parse there and
-            # drops the rule, so the same range is enforced here
             if v is None:
                 return None
             if isinstance(v, bool) or not isinstance(v, int):
@@ -143,8 +155,7 @@ class Rule:
 
         def gk_elem(e) -> str:
             if isinstance(e, (list, dict)):
-                # from_json coerces a container ELEMENT to its compact
-                # JSON text ('["a"]'); json.dumps with no spaces matches
+                # a container ELEMENT becomes its compact JSON text ('["a"]')
                 return json.dumps(e, separators=(",", ":"))
             return as_str(e)
 
@@ -164,15 +175,15 @@ class Rule:
         lim = doc.get("limit", 0)
         if isinstance(lim, bool) or isinstance(lim, (list, dict)):
             raise ValueError(f"limit must be numeric, got {lim!r}")
-        import decimal
-
         try:
-            lim_d = decimal.Decimal(str(lim)).quantize(
-                decimal.Decimal("0.0001"), rounding=decimal.ROUND_HALF_UP
+            lim_d = Decimal(str(lim)).quantize(
+                Decimal("0.0001"), rounding=ROUND_HALF_UP
             )
-        except decimal.DecimalException as e:
+            # a NaN limit survives quantize and signals here
+            in_range = abs(lim_d) < Decimal(10) ** 14
+        except DecimalException as e:
             raise ValueError(f"bad limit {lim!r}") from e
-        if abs(lim_d) >= decimal.Decimal(10) ** 14:
+        if not in_range:
             raise ValueError(f"limit {lim!r} out of DECIMAL(18,4) range")
         # field-name alias: the reference's sample rule spells the key
         # "LimitOperatorType" (capital L — fastjson smart-matches it);
@@ -196,9 +207,17 @@ class Rule:
             seq=seq,
         )
 
-    def as_row(self) -> tuple:
-        from decimal import Decimal
+    def to_wire(self) -> dict:
+        """The canonical reference-wire document of this rule: symbolic
+        operator, grouping keys as a list, the limit as its exact decimal
+        string, an explicit seq, None fields left out.
+        ``Rule.from_wire(r.to_wire()) == r`` for every rule from_wire
+        returns."""
+        doc = {WIRE_NAMES[f.name]: getattr(self, f.name) for f in fields(self)}
+        doc["groupingKeyNames"] = list(self.grouping_keys)
+        return {k: v for k, v in doc.items() if v is not None}
 
+    def as_row(self) -> tuple:
         return (
             self.rule_id,
             self.rule_state,
@@ -215,12 +234,12 @@ class Rule:
 
 
 def compact_rule_list(rules: list["Rule"]) -> list["Rule"]:
-    """Python mirror of compact_rules (the DataFrame twin): last seq wins
-    per rule_id, then ACTIVE only (DELETE tombstones and PAUSEd rules
-    drop). The ONE implementation every driver-side consumer shares —
-    the oracle generator, plan-shape routing, and window-spec grouping
-    must stay in lockstep with the in-plan compaction, and five
-    hand-rolled copies of this loop once drifted one semantic apart."""
+    """Last seq wins per rule_id (the later list entry on a seq tie),
+    then ACTIVE only (DELETE tombstones and PAUSEd rules drop). The ONE
+    compaction of in-memory rule lists — the oracle generator, plan-shape
+    routing, window-spec grouping and the batch plans' rule table all
+    share it, so the engine and the oracle cannot keep different
+    versions of a rule."""
     latest: dict[int, Rule] = {}
     for r in sorted(rules, key=lambda r: r.seq):
         latest[r.rule_id] = r
@@ -237,7 +256,7 @@ def parse_rule_lines(lines: list[str]) -> list[Rule]:
             continue
         try:
             out.append(Rule.from_wire(json.loads(line), seq=i))
-        except (ValueError, KeyError, TypeError, json.JSONDecodeError):
+        except ValueError:  # json.JSONDecodeError included
             continue
     return out
 
@@ -245,137 +264,6 @@ def parse_rule_lines(lines: list[str]) -> list[Rule]:
 def rules_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
     """Materialize rules as the internal rule-table DataFrame."""
     return spark.createDataFrame([r.as_row() for r in rules], RULE_SCHEMA)
-
-
-def parse_rule_lines_df(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """DataFrame-native wire-format rule parse (P3/P4) — the engine-side
-    twin of ``parse_rule_lines`` for rule streams/tables that live in files.
-
-    Mirrors the reference's lenient fastjson parse (CEPTaskRunner.java:54-56,
-    Rule.java:12-24) entirely with built-in expressions:
-      * limitOperatorType arrives as a symbol (">", "<=", …) and is kept
-        symbolic (LimitOperatorType.fromString, Rule.java:99-107);
-        unknown symbols drop the rule.
-      * groupingKeyNames may be a JSON array OR a bare string — parsed
-        twice (array + string) and coalesced.
-      * windowType other than tumbling/sliding/session ⇒ global
-        (CEPEngine.java:75-81; "session" is this engine's extension).
-      * a bad line/doc ⇒ null ⇒ filtered (parse-error→null→filter,
-        CEPTaskRunner.java:40), including structurally-invalid rules
-        (tumbling without windowMinutes etc. — Rule.__post_init__ twins).
-      * TYPE discipline in lockstep with Rule.from_wire (pinned by
-        tests/test_rules_fuzz.py): a field that is PRESENT on the wire
-        but fails its typed parse (limit "abc", windowMinutes 2.5, seq
-        "4", groupingKeyNames as an object) drops the WHOLE rule — a
-        second all-strings parse distinguishes present-but-malformed
-        from absent, mirroring fastjson's whole-document type failure.
-
-    Output: internal RULE_SCHEMA columns, ready for compact_rules.
-    """
-    from flink_cep_task_spark.schemas import RULE_WIRE_SCHEMA
-
-    v = F.col(value_col)
-    parsed = lines.select(
-        F.from_json(v, RULE_WIRE_SCHEMA).alias("r"),
-        # raw all-strings parse: per-field "was it present on the wire?"
-        # (and the bare-string groupingKeyNames fallback). from_json into
-        # string fields keeps the literal text of any scalar, '['/'{'
-        # prefixed text for containers.
-        F.from_json(
-            v,
-            "struct<groupingKeyNames:string, windowMinutes:string,"
-            " windowSlideMinute:string, `limit`:string, seq:string,"
-            " LimitOperatorType:string>",
-        ).alias("raw"),
-    )
-    r = F.col("r")
-    raw = F.col("raw")
-    state = F.coalesce(r["ruleState"], F.lit("ACTIVE"))
-    wt_raw = r["windowType"]
-    wt = F.when(
-        wt_raw.isin("tumbling", "sliding", "session"), wt_raw
-    ).otherwise(F.lit("global"))
-    gk_str = raw["groupingKeyNames"]
-    # bare-scalar fallback only for true scalars: container-shaped raw
-    # text ('['-prefixed failed arrays can't happen — the typed parse
-    # coerces array elements — but '{'-prefixed objects can) is malformed
-    gk_is_object = gk_str.isNotNull() & gk_str.startswith("{")
-    gk = F.coalesce(
-        r["groupingKeyNames"],
-        F.when(gk_str.isNotNull() & ~gk_is_object, F.array(gk_str)),
-        F.array().cast("array<string>"),
-    )
-    agg_type = F.coalesce(r["aggregatorFunctionType"], F.lit("SUM"))
-    # capital-L field alias (reference resources/rules:1) + enum-name →
-    # symbol normalization, in lockstep with Rule.from_wire
-    op_raw = F.coalesce(
-        r["limitOperatorType"], raw["LimitOperatorType"], F.lit(">")
-    )
-    limit_op = op_raw
-    for name, sym in LIMIT_OP_NAMES.items():
-        limit_op = F.when(op_raw == name, F.lit(sym)).otherwise(limit_op)
-    is_delete = state == "DELETE"
-    out = parsed.select(
-        r["ruleId"].alias("rule_id"),
-        state.alias("rule_state"),
-        wt.alias("window_type"),
-        r["windowMinutes"].alias("window_minutes"),
-        r["windowSlideMinute"].alias("window_slide_minutes"),
-        gk.alias("grouping_keys"),
-        agg_type.alias("agg_type"),
-        F.coalesce(r["aggregateFieldName"], F.lit("value")).alias("agg_field"),
-        limit_op.alias("limit_op"),
-        F.coalesce(r["limit"], F.lit(0).cast("decimal(18,4)")).alias("limit"),
-        F.coalesce(r["seq"], F.lit(0).cast("long")).alias("seq"),
-        is_delete.alias("__del"),
-        # present-but-malformed detection: raw text exists, typed parse
-        # nulled out (or, for groupingKeyNames, the raw is an object) —
-        # fastjson fails the whole doc on a field type mismatch, so we
-        # drop the rule rather than coalescing a default over the value
-        (
-            (raw["limit"].isNotNull() & r["limit"].isNull())
-            | (raw["windowMinutes"].isNotNull() & r["windowMinutes"].isNull())
-            | (
-                raw["windowSlideMinute"].isNotNull()
-                & r["windowSlideMinute"].isNull()
-            )
-            | (raw["seq"].isNotNull() & r["seq"].isNull())
-            | (gk_is_object & r["groupingKeyNames"].isNull())
-        ).alias("__malformed"),
-    )
-    valid = (
-        F.col("rule_id").isNotNull()
-        & ~F.col("__malformed")
-        & F.col("rule_state").isin(*RULE_STATES)
-        & (
-            F.col("__del")
-            | (
-                F.col("agg_type").isin(*AGG_TYPES)
-                & F.col("limit_op").isin(*LIMIT_OPS)
-                & (
-                    # strictly-positive windows, in LOCKSTEP with
-                    # Rule.__post_init__ (a falsy/negative size is a
-                    # droppable bad doc, and `> 0` is null-safe false —
-                    # NULL never passes)
-                    (F.col("window_type") == "global")
-                    | (
-                        (F.col("window_type") == "tumbling")
-                        & (F.col("window_minutes") > 0)
-                    )
-                    | (
-                        (F.col("window_type") == "sliding")
-                        & (F.col("window_minutes") > 0)
-                        & (F.col("window_slide_minutes") > 0)
-                    )
-                    | (
-                        (F.col("window_type") == "session")
-                        & (F.col("window_minutes") > 0)
-                    )
-                )
-            )
-        )
-    )
-    return out.filter(valid).drop("__del", "__malformed")
 
 
 def compact_rules(changelog: DataFrame) -> DataFrame:
@@ -394,7 +282,3 @@ def compact_rules(changelog: DataFrame) -> DataFrame:
         .filter(F.col("rule_state") != "DELETE")
     )
 
-
-def active_rules(compacted: DataFrame) -> DataFrame:
-    """ACTIVE rules only — PAUSE rules stop matching (Rule.java:63-66)."""
-    return compacted.filter(F.col("rule_state") == "ACTIVE")

@@ -39,29 +39,6 @@ METRIC_SCHEMA = StructType(
     ]
 )
 
-# Rule as it arrives on the control stream (JSON lines). Field names follow
-# the reference wire format (resources/rules:1, Rule.java:12-24) so the same
-# rule documents drive both engines. groupingKeyNames is parsed leniently:
-# JSON may carry an array or a bare string (see rules.parse_rules_json).
-RULE_WIRE_SCHEMA = StructType(
-    [
-        StructField("ruleId", IntegerType(), False),
-        StructField("ruleState", StringType(), True),
-        StructField("windowType", StringType(), True),
-        StructField("windowMinutes", IntegerType(), True),
-        StructField("windowSlideMinute", IntegerType(), True),
-        StructField("groupingKeyNames", ArrayType(StringType()), True),
-        StructField("aggregatorFunctionType", StringType(), True),
-        StructField("aggregateFieldName", StringType(), True),
-        StructField("limitOperatorType", StringType(), True),
-        StructField("limit", DecimalType(18, 4), True),
-        # not in the reference wire format: optional explicit changelog
-        # position for file-based rule stores (absent ⇒ 0; the reference
-        # orders upserts by socket arrival, CEPTaskRunner.java:37-41).
-        StructField("seq", LongType(), True),
-    ]
-)
-
 # Internal (snake_case) compacted rule table schema; `seq` orders rule
 # upserts for last-writer-wins compaction (reference keeps a per-task
 # BroadcastState map keyed by ruleId, PartitionEngine.java:54-63).

@@ -16,12 +16,16 @@ this correct (probed, not assumed):
 
 Hence the store keeps the ENTIRE rule changelog as ONE JSON array on ONE
 line of ONE file, atomically replaced on every upsert/delete: the line
-reader always consumes line 1 to its true end, so growth is safe, and the
-in-plan parse+compaction (parse_rule_lines_df → compact_rules) re-resolves
-the ACTIVE rule set every micro-batch. A rule change therefore takes effect
-at the next trigger — the Spark-idiomatic equivalent of Flink's broadcast
-state upsert, and strictly better than the reference's quirk Q6 (rules
-captured per group at first sight, never invalidated, CEPEngine.java:55-64).
+reader always consumes line 1 to its true end, so growth is safe. Each
+document is validated ONCE, when it enters the store (Rule.from_wire —
+the engine's only wire parser; a bad document raises and is never
+written), and stored in canonical wire form, so the plan's side is a
+plain typed read (rules_from_store → compact_rules) that re-resolves the
+ACTIVE rule set every micro-batch with no aliasing, coercion or
+validation. A rule change therefore takes effect at the next trigger —
+the Spark-idiomatic equivalent of Flink's broadcast state upsert, and
+strictly better than the reference's quirk Q6 (rules captured per group
+at first sight, never invalidated, CEPEngine.java:55-64).
 
 Windowing: rules are data, so window sizes are COLUMNS — the built-in
 `F.window()` (literal durations) cannot express them. A single
@@ -65,6 +69,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -72,11 +77,13 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
 from flink_cep_task_spark.operators.windows import apply_threshold
 from flink_cep_task_spark.operators.windows import round_half_up as _round_half_up_col
-from flink_cep_task_spark.rules import compact_rules, parse_rule_lines_df
+from flink_cep_task_spark.rules import WIRE_NAMES, Rule, compact_rules
+from flink_cep_task_spark.schemas import RULE_SCHEMA
 
 SECONDS_PER_MINUTE = 60
 DEFAULT_STATE_BUCKETS = 64  # per rule; raise ∝ cluster cores at scale
@@ -103,9 +110,11 @@ class RuleFileStore:
     """Rule changelog as one single-line JSON-array file, atomically
     replaced on every change — the live engine's control channel.
 
-    Wire format per entry = the reference's rule JSON (Rule.java:12-24)
-    plus an explicit `seq` so last-writer-wins compaction is deterministic
-    (the reference relies on socket arrival order)."""
+    Validates on write: every document goes through Rule.from_wire, and
+    one that fails raises ValueError and is not stored. Entries are the
+    canonical wire documents (Rule.to_wire) with the store's own `seq`
+    in place of any the document carried, so last-writer-wins compaction
+    follows write order (the reference relies on socket arrival order)."""
 
     def __init__(self, path: str):
         self.path = path
@@ -122,8 +131,9 @@ class RuleFileStore:
         self._append({"ruleId": rule_id, "ruleState": "DELETE"})
 
     def _append(self, doc: dict) -> None:
-        self._seq += 1
-        self._log.append({**doc, "seq": self._seq})
+        rule = replace(Rule.from_wire(doc), seq=self._seq + 1)
+        self._seq = rule.seq
+        self._log.append(rule.to_wire())
         self._flush()
 
     def _flush(self) -> None:
@@ -136,17 +146,29 @@ class RuleFileStore:
         os.replace(tmp, self.path)
 
 
+# the store's documents as written by Rule.to_wire, typed like RULE_SCHEMA
+# except the limit, which the wire carries as its exact decimal string
+_STORED_RULES = ArrayType(
+    StructType([
+        StructField(WIRE_NAMES[f.name], StringType() if f.name == "limit" else f.dataType)
+        for f in RULE_SCHEMA.fields
+    ])
+)
+
+
 def rules_from_store(spark: SparkSession, path: str) -> DataFrame:
-    """Static-side rule table: single-line JSON array → exploded wire docs
-    → internal rule rows. Re-executed (and the file re-READ) every
-    micro-batch when joined against a stream."""
-    # from_json to array<string> captures each array element's RAW JSON
-    # text (Jackson object-as-string), handing parse_rule_lines_df one wire
-    # doc per row.
+    """Static-side rule table: the single-line JSON array of validated
+    wire docs, read with one typed from_json, exploded and renamed to
+    RULE_SCHEMA. Re-executed (and the file re-READ) every micro-batch
+    when joined against a stream."""
     docs = spark.read.text(path).select(
-        F.explode(F.from_json(F.col("value"), "array<string>")).alias("value")
+        F.explode(F.from_json(F.col("value"), _STORED_RULES)).alias("r")
     )
-    return parse_rule_lines_df(docs)
+    # the cast is a no-op for every column but the limit string
+    return docs.select(*[
+        F.col("r")[WIRE_NAMES[f.name]].cast(f.dataType).alias(f.name)
+        for f in RULE_SCHEMA.fields
+    ])
 
 
 def _round_half_up(v: float, digits: int) -> float:
@@ -420,13 +442,13 @@ def build_live_cep(
         fanned.filter(F.col("window_type") != "session"),
         state_buckets=state_buckets,
     )
-    # session gaps known at build time: collected from the Spark-parsed
+    # session gaps known at build time: collected from the stored
     # changelog itself (tiny control-plane collect — works for any store
     # path spark.read.text can resolve, local or remote). ALL changelog
     # entries contribute, not just currently-ACTIVE ones, so a PAUSEd
     # rule's gap has a live branch the moment it re-activates; only a
-    # gap never seen before plan time needs a restart. Tombstones carry
-    # no windowType and coerce to global, so they never add a gap.
+    # gap never seen before plan time needs a restart. Tombstones are
+    # stored as global rules, so they never add a gap.
     session_gaps = sorted(
         int(r.window_minutes)
         for r in rules.filter(F.col("window_type") == "session")
@@ -538,28 +560,13 @@ def run_live_cep_global(
             .when(F.col("agg_type") == "MIN", F.col("__min") / 100.0)
             .otherwise(F.col("__max") / 100.0)
         )
-        lim = F.col("limit").cast("double")
-        v = F.col("agg_value")
-        op = F.col("limit_op")
-        passed = (
-            F.when(op == "=", v == lim)
-            .when(op == "!=", v != lim)
-            .when(op == ">", v > lim)
-            .when(op == ">=", v >= lim)
-            .when(op == "<", v < lim)
-            .otherwise(v <= lim)
-        )
-        out = (
-            j.withColumn("agg_value", value)
-            .filter(passed)
-            .select(
-                "rule_id",
-                "group_id",
-                F.lit(None).cast("long").alias("window_start"),
-                F.lit(None).cast("long").alias("window_end"),
-                "agg_type",
-                _round_half_up_col("agg_value", 4).alias("agg_value"),
-            )
+        out = apply_threshold(j.withColumn("agg_value", value)).select(
+            "rule_id",
+            "group_id",
+            F.lit(None).cast("long").alias("window_start"),
+            F.lit(None).cast("long").alias("window_end"),
+            "agg_type",
+            _round_half_up_col("agg_value", 4).alias("agg_value"),
         )
         sink(out, batch_id)
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
 from flink_cep_task_spark.operators.windows import apply_threshold, round_half_up
-from flink_cep_task_spark.rules import Rule, compact_rules, rules_df
+from flink_cep_task_spark.rules import Rule, compact_rule_list, rules_df
 from flink_cep_task_spark.sources.jsonline import parse_metric_lines
 
 DEFAULT_WATERMARK = "10 minutes"
@@ -85,24 +85,6 @@ def metrics_stream_from_socket(
     return parse_metric_lines(lines, value_col="value")
 
 
-def rules_stream_from_socket(
-    spark: SparkSession, host: str = "127.0.0.1", port: int = 8888
-) -> DataFrame:
-    """The reference's rule channel (socket 8888, CEPTaskRunner.java:37) —
-    wire-format rule JSON lines parsed in-plan. For the live engine's
-    per-batch refresh semantics, rules usually live in a RuleFileStore
-    (streaming/live.py); this source exists for socket-workflow parity."""
-    from flink_cep_task_spark.rules import parse_rule_lines_df
-
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    return parse_rule_lines_df(lines)
-
-
 def rules_socket_to_store(
     spark: SparkSession,
     store,
@@ -116,10 +98,10 @@ def rules_socket_to_store(
     metric pipeline re-reads each micro-batch — Flink's broadcast-rule
     stream re-expressed as socket → compacted control table.
 
-    Non-JSON lines are dropped here (the reference's parse-error drop,
-    CEPTaskRunner.java:54-56,40); field validation happens in-plan when the
-    store is read (parse_rule_lines_df). The foreachBatch collect is
-    control-plane only: rule traffic is KBs, never data-sized.
+    A line that is not valid JSON or not a valid rule is dropped here —
+    the store validates on write and raises ValueError (the reference's
+    parse-error drop, CEPTaskRunner.java:54-56,40). The foreachBatch
+    collect is control-plane only: rule traffic is KBs, never data-sized.
 
     Returns the started bridge query; run it alongside build_live_cep on
     the metric socket for the reference's dual-socket workflow."""
@@ -135,11 +117,9 @@ def rules_socket_to_store(
     def absorb(batch_df, _batch_id: int) -> None:
         for row in batch_df.collect():
             try:
-                doc = _json.loads(row.value)
-            except (ValueError, TypeError):
+                store.upsert(_json.loads(row.value))
+            except ValueError:
                 continue
-            if isinstance(doc, dict):
-                store.upsert(doc)
 
     q = lines.writeStream.foreachBatch(absorb)
     if trigger:
@@ -224,11 +204,9 @@ def kafka_records_to_metrics(records: DataFrame) -> DataFrame:
     return parse_metric_lines(lines, value_col="value")
 
 
-def _window_specs(rules: list[Rule]) -> dict[tuple, list[Rule]]:
-    from flink_cep_task_spark.rules import compact_rule_list
-
+def _window_specs(active: list[Rule]) -> dict[tuple, list[Rule]]:
     groups: dict[tuple, list[Rule]] = {}
-    for r in compact_rule_list(rules):
+    for r in active:
         key = (r.window_type, r.window_minutes, r.window_slide_minutes)
         groups.setdefault(key, []).append(r)
     return groups
@@ -272,7 +250,7 @@ def build_streaming_cep(
     passing its threshold, schema identical to the batch engine's output.
     global_stream: update-mode running aggregates for global-window rules.
     """
-    compacted = compact_rules(rules_df(spark, rules))
+    active = compact_rule_list(rules)
     # engine-wide time domain is EPOCH SECONDS (TS_S in every batch
     # oracle). Boundary-aligned tumbling/sliding assignment is indifferent
     # to sub-second precision, but SESSION merge distances are not: two
@@ -282,11 +260,11 @@ def build_streaming_cep(
     wm = metrics.withColumn(
         "event_time", F.date_trunc("second", F.col("event_time"))
     ).withWatermark("event_time", watermark)
-    fanned = fanout_rules(wm, compacted)
+    fanned = fanout_rules(wm, rules_df(spark, active))
 
     windowed_parts: list[DataFrame] = []
     global_part: DataFrame | None = None
-    for (wtype, minutes, slide), specs in _window_specs(rules).items():
+    for (wtype, minutes, slide), specs in _window_specs(active).items():
         ids = [r.rule_id for r in specs]
         part = fanned.filter(F.col("rule_id").isin(ids))
         if wtype == "global":

@@ -47,7 +47,7 @@ R2_RULE = Rule(rule_id=2, window_type="sliding", window_minutes=10,
 
 
 def test_rule_file_store_compaction(spark, tmp_path):
-    """Store upserts/deletes → in-plan parse + compaction resolves the
+    """Store upserts/deletes → typed store read + compaction resolves the
     latest ACTIVE rule set (BroadcastState upsert/remove twin)."""
     store = RuleFileStore(str(tmp_path / "rules.json"))
     store.upsert(R1_WIRE)

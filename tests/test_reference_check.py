@@ -33,17 +33,18 @@ def test_reference_sample_workload_end_to_end(spark):
     assert got == mod.REF_EXPECTED == {("1_business", 16.0), ("1_work", 16.0)}
 
 
-def test_reference_rule_line_parses_in_both_twins(spark):
-    """The sample rule's wire quirks parse identically in the python and
-    DataFrame parsers: t_group key, SUM cpu_usage, '>' 11, 2-minute
-    tumbling."""
-    from flink_cep_task_spark.rules import parse_rule_lines, parse_rule_lines_df
+def test_reference_rule_line_parses_in_both_twins(spark, tmp_path):
+    """The sample rule's wire quirks parse identically in the parser and
+    in the rule table the live engine reads back from its store: t_group
+    key, SUM cpu_usage, '>' 11, 2-minute tumbling."""
+    from flink_cep_task_spark.rules import parse_rule_lines
+    from tests.test_rules_wire import store_lines
 
     mod = _load_topology_module()
     [py] = parse_rule_lines([mod.REF_RULE_LINE])
-    df = spark.createDataFrame([(mod.REF_RULE_LINE,)], ["value"])
-    [dfr] = parse_rule_lines_df(df).collect()
-    for r in (py, dfr):
+    table, _ = store_lines(spark, tmp_path, [mod.REF_RULE_LINE])
+    [stored] = table.collect()
+    for r in (py, stored):
         assert r.rule_id == 1
         assert r.window_type == "tumbling" and r.window_minutes == 2
         assert tuple(r.grouping_keys) == ("t_group",)

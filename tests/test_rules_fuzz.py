@@ -1,25 +1,25 @@
-"""Hypothesis fuzz of the rule WIRE parser twins (VERDICT r5 task #7),
-mirroring tests/test_jsonline_fuzz.py for the rule channel: arbitrary
-byte soup must never crash either parser, and for every generated
-document the Python parser (rules.parse_rule_lines — drives oracle
-generation and plan routing) and the DataFrame parser
-(rules.parse_rule_lines_df — runs in-plan) must accept/drop the SAME
-rules with the SAME parsed fields. The fuzz domain covers the
-reference's wire vocabulary (Rule.java:12-24): the symbolic operator set
-(Rule.java:99-107), unknown-windowType coercion to global
-(CEPEngine.java:75-81), array-or-bare-scalar groupingKeyNames, lifecycle
-states, and type-malformed values (float window minutes, string limits,
-container keys) that a fastjson parse would fail the whole document on.
-
-One divergence is BY DESIGN and pinned separately below: a doc with NO
-seq takes the socket arrival index in the Python parser but 0 in the
-DataFrame twin (a DataFrame has no line order) — so fuzzed docs always
-carry an explicit seq.
+"""Hypothesis fuzz of the rule WIRE parser (VERDICT r5 task #7),
+mirroring tests/test_jsonline_fuzz.py for the rule channel. Rules are
+parsed by ONE parser, Rule.from_wire (via rules.parse_rule_lines), and
+validated once, when they enter the live engine's RuleFileStore; the
+plan then reads the stored canonical documents back as typed data
+(streaming.live.rules_from_store). The two sides pinned here are that
+parse and the stored table: arbitrary byte soup must never crash the
+parser, the store must reject exactly the documents the parser drops,
+and the table read back must hold the SAME rules with the SAME fields.
+The fuzz domain covers the reference's wire vocabulary
+(Rule.java:12-24): the symbolic operator set (Rule.java:99-107),
+unknown-windowType coercion to global (CEPEngine.java:75-81),
+array-or-bare-scalar groupingKeyNames, lifecycle states, and
+type-malformed values (float window minutes, string limits, container
+keys) that a fastjson parse would fail the whole document on.
+Canonical wire documents (Rule.to_wire) round-trip through the parser.
 """
 
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 from decimal import Decimal
 
 from hypothesis import HealthCheck, given, settings
@@ -27,10 +27,14 @@ from hypothesis import strategies as st
 
 from flink_cep_task_spark.rules import (
     LIMIT_OP_NAMES,
+    Rule,
+    compact_rule_list,
+    compact_rules,
     parse_rule_lines,
-    parse_rule_lines_df,
 )
 from flink_cep_task_spark.schemas import AGG_TYPES, LIMIT_OPS, RULE_STATES
+from flink_cep_task_spark.streaming.live import RuleFileStore, rules_from_store
+from tests.test_rules_wire import store_lines
 
 _ascii = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=8
@@ -56,8 +60,8 @@ _minutes = st.one_of(
     st.booleans(),
     st.none(),
 )
-# gk elements: scalars + one nested container (from_json coerces the
-# element to compact JSON text; the python twin json.dumps-matches it)
+# gk elements: scalars + one nested container (kept as its compact JSON
+# text)
 _gk_elem = st.one_of(
     st.sampled_from(["t_user", "t_event_type", "t_g", ""]),
     st.integers(min_value=0, max_value=99),
@@ -111,7 +115,7 @@ _line = st.one_of(_doc.map(json.dumps), _garbage)
 
 
 def _norm(r) -> tuple:
-    """Comparable normal form of a parsed rule from either twin."""
+    """Comparable normal form of a parsed Rule or a stored rule-table row."""
     return (
         r.rule_id,
         r.rule_state,
@@ -133,18 +137,43 @@ def _norm(r) -> tuple:
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(lines=st.lists(_line, min_size=1, max_size=10))
-def test_wire_parser_twins_agree_and_never_crash(spark, lines):
-    py = sorted(_norm(r) for r in parse_rule_lines(lines))
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    dfr = sorted(_norm(r) for r in parse_rule_lines_df(df).collect())
-    assert py == dfr
+def test_wire_parser_twins_agree_and_never_crash(spark, tmp_path_factory, lines):
+    """The parser never crashes; the store rejects a line exactly when
+    the parser drops it; the stored table equals the parsed changelog
+    (re-sequenced in write order), before and after compaction."""
+    parse_rule_lines(lines)
+    store = RuleFileStore(str(tmp_path_factory.mktemp("fuzz") / "rules.json"))
+    accepted = []
+    for line in lines:
+        parsed = parse_rule_lines([line])
+        try:
+            store.upsert(json.loads(line))
+        except ValueError:
+            assert not parsed, line
+            continue
+        assert parsed, line
+        accepted.append(replace(parsed[0], seq=len(accepted) + 1))
+    table = rules_from_store(spark, store.path)
+    assert sorted(map(_norm, table.collect())) == sorted(map(_norm, accepted))
+    got = compact_rules(table).filter("rule_state = 'ACTIVE'").collect()
+    assert sorted(map(_norm, got)) == sorted(map(_norm, compact_rule_list(accepted)))
 
 
-def test_symbol_operator_matrix_both_twins(spark):
-    """Every symbolic operator (Rule.java:99-107) parses in BOTH twins;
-    reference enum NAMES (the wire form fastjson actually accepts —
-    resources/rules:1 says GREATER) normalize to symbols; unknown
-    operators drop the rule in both."""
+@settings(max_examples=200, deadline=None)
+@given(doc=_doc)
+def test_to_wire_round_trips(doc):
+    """Rule.from_wire(r.to_wire()) == r for every rule the parser builds,
+    also through the JSON text the store writes."""
+    for r in parse_rule_lines([json.dumps(doc)]):
+        assert Rule.from_wire(r.to_wire()) == r
+        assert Rule.from_wire(json.loads(json.dumps(r.to_wire()))) == r
+
+
+def test_symbol_operator_matrix_both_twins(spark, tmp_path):
+    """Every symbolic operator (Rule.java:99-107) parses, in the parser
+    and in the stored rule table; reference enum NAMES (the wire form
+    fastjson actually accepts — resources/rules:1 says GREATER)
+    normalize to symbols; unknown operators drop the rule in both."""
     ok = sorted(LIMIT_OPS)
     names = sorted(LIMIT_OP_NAMES)  # enum-name forms normalize to symbols
     bad = ["~", "greater", "=>", ""]
@@ -158,15 +187,15 @@ def test_symbol_operator_matrix_both_twins(spark):
     expect = {i: op for i, op in enumerate(ok)}
     expect.update({len(ok) + j: LIMIT_OP_NAMES[n] for j, n in enumerate(names)})
     py = {r.rule_id: r.limit_op for r in parse_rule_lines(lines)}
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    dfo = {r.rule_id: r.limit_op for r in parse_rule_lines_df(df).collect()}
-    assert py == dfo == expect
+    table, _ = store_lines(spark, tmp_path, lines)
+    stored = {r.rule_id: r.limit_op for r in table.collect()}
+    assert py == stored == expect
 
 
-def test_unknown_window_type_coerces_to_global_both_twins(spark):
-    """Truly-unknown windowType strings coerce to global in both twins
-    (CEPEngine.java:75-81); the three named types plus the session
-    extension stay themselves."""
+def test_unknown_window_type_coerces_to_global_both_twins(spark, tmp_path):
+    """Truly-unknown windowType strings coerce to global (CEPEngine.java:
+    75-81), in the parser and in the stored rule table; the three named
+    types plus the session extension stay themselves."""
     cases = ["tumbling", "sliding", "session", "global", "lifetime", "TUMBLING", "x"]
     lines = [
         json.dumps(
@@ -180,22 +209,6 @@ def test_unknown_window_type_coerces_to_global_both_twins(spark):
         3: "global", 4: "global", 5: "global", 6: "global",
     }
     py = {r.rule_id: r.window_type for r in parse_rule_lines(lines)}
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    dfo = {r.rule_id: r.window_type for r in parse_rule_lines_df(df).collect()}
-    assert py == dfo == expect
-
-
-def test_seq_default_divergence_is_the_documented_one(spark):
-    """A doc with NO seq: the python parser assigns the line index (socket
-    arrival order supplies sequencing), the DataFrame twin assigns 0 (a
-    DataFrame has no line order — file stores carry explicit seq). This is
-    the ONLY sanctioned twin divergence; everything else is fuzz-pinned."""
-    lines = [
-        json.dumps({"ruleId": 1, "windowType": "global"}),
-        json.dumps({"ruleId": 2, "windowType": "global"}),
-    ]
-    py = {r.rule_id: r.seq for r in parse_rule_lines(lines)}
-    assert py == {1: 0, 2: 1}
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    dfo = {r.rule_id: r.seq for r in parse_rule_lines_df(df).collect()}
-    assert dfo == {1: 0, 2: 0}
+    table, _ = store_lines(spark, tmp_path, lines)
+    stored = {r.rule_id: r.window_type for r in table.collect()}
+    assert py == stored == expect

@@ -8,6 +8,7 @@ import json
 import os
 import time
 import uuid
+from dataclasses import replace
 
 import pytest
 
@@ -153,6 +154,24 @@ def test_rule_update_across_restart(spark, tmp_path):
     n_strict = spark.table(out_strict).filter(~F.col("group_id").contains(FLUSH_TAG)).count()
     assert n_loose > 0
     assert n_strict == 0  # compacted seq=5 limit of 10000 suppresses everything
+
+
+def test_streaming_equal_seq_versions_later_listed_wins(spark, tmp_path):
+    """Two versions of rule 1 with the same seq: the streaming plan keeps
+    the later-listed one, like the batch engine and the oracle."""
+    src = _write_chunks(tmp_path, _events(60), n_chunks=2)
+    strict = replace(RULES[0], limit="10000")
+    counts = []
+    for rules in ([strict, RULES[0]], [RULES[0], strict]):
+        name = f"eq_{uuid.uuid4().hex[:8]}"
+        w, _ = build_streaming_cep(
+            metrics_stream_from_text(spark, src), spark, rules, watermark="1 minute"
+        )
+        run_to_memory(w, name, "append", str(tmp_path / f"c_{name}"))
+        counts.append(
+            spark.table(name).filter(~F.col("group_id").contains(FLUSH_TAG)).count()
+        )
+    assert counts[0] > 0 and counts[1] == 0
 
 
 def test_streaming_first_event_tumbling_state(spark, tmp_path):

@@ -74,6 +74,16 @@ def test_threshold_gate_suppresses(spark):
     assert evaluate_rules(spark, df, [_sum_rule(limit="100")]).count() == 0
 
 
+def test_equal_seq_versions_later_listed_wins(spark):
+    """Two versions of one rule with the same seq (the default 0): the
+    engine keeps the later-listed one, as compact_rule_list and the
+    oracle built on it do — in either order."""
+    df = _metrics_df(spark, [(1, {"t_g": "x"}, {"m": 50})])
+    strict, loose = _sum_rule(limit="100"), _sum_rule(limit="0")
+    assert evaluate_rules(spark, df, [strict, loose]).count() == 1
+    assert evaluate_rules(spark, df, [loose, strict]).count() == 0
+
+
 def test_all_six_comparators(spark):
     df = _metrics_df(spark, [(1, {"t_g": "x"}, {"m": 5})])
     for op, limit, expected in [
