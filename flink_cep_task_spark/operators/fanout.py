@@ -31,7 +31,8 @@ def fanout_rules(metrics: DataFrame, rules: DataFrame) -> DataFrame:
     aggregate input value.
 
     metrics: (event_time, tags MAP, metrics MAP)  [METRIC_SCHEMA]
-    rules:   internal rule table (RULE_SCHEMA), pre-compacted; PAUSE rules
+    rules:   internal rule table (RULE_SCHEMA), one version per rule_id
+             (compacted, or the live store's current rules); PAUSE rules
              are excluded here (Rule.java:65 — only ACTIVE rules match).
     """
     r = rules.filter(F.col("rule_state") == "ACTIVE").select(
@@ -44,11 +45,6 @@ def fanout_rules(metrics: DataFrame, rules: DataFrame) -> DataFrame:
         "agg_field",
         "limit_op",
         "limit",
-        # rule VERSION rides every fanned row: live operators that must
-        # gate with "config as of the key's latest data" (mid-run
-        # upserts) pick the highest-seq config via max_by — batch paths
-        # simply ignore the column
-        "seq",
     )
     # tag-containment: every grouping key exists in this row's tags
     # (Rule.java:63-66), expressed WITHOUT a higher-order-function lambda:
@@ -90,6 +86,5 @@ def fanout_rules(metrics: DataFrame, rules: DataFrame) -> DataFrame:
         "agg_type",
         "limit_op",
         "limit",
-        "seq",
         agg_input.alias("agg_input"),
     )

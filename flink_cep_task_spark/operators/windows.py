@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SECONDS_PER_MINUTE = 60
+# agg_value decimals — the oracle rounds to the same 4 (oracle._rule_sql)
+ROUND_DIGITS = 4
 
 
 def assign_windows(fanned: DataFrame, ts_col: str = "event_time") -> DataFrame:
@@ -78,9 +80,22 @@ def assign_windows(fanned: DataFrame, ts_col: str = "event_time") -> DataFrame:
     )
 
 
+def partial_aggs() -> list:
+    """The four mergeable partials every aggregate kind is derived from:
+    __sum, __cnt, __min, __max of the fanned `agg_input` (SQL semantics —
+    nulls ignored)."""
+    return [
+        F.sum("agg_input").alias("__sum"),
+        F.count("agg_input").alias("__cnt"),
+        F.min("agg_input").alias("__min"),
+        F.max("agg_input").alias("__max"),
+    ]
+
+
 def aggregate_windows(assigned: DataFrame) -> DataFrame:
-    """One hash aggregation computing all four aggregate kinds, then a CASE
-    projection picks each rule's requested one (Window.java:40-47 dispatch).
+    """One hash aggregation computing the partials of all four aggregate
+    kinds per (rule, group, window); gate_windows then picks each rule's
+    requested one (Window.java:40-47 dispatch).
 
     Catalyst runs this as partial (map-side) + final aggregation — the
     incremental-fold behavior of the reference (Window.java:98-126) falls
@@ -88,7 +103,7 @@ def aggregate_windows(assigned: DataFrame) -> DataFrame:
     (exact decimal SUM, COUNT) instead of the reference's buffered TreeMap
     (strictly better: O(1) state per window, no raw-row retention).
     """
-    agg = assigned.groupBy(
+    return assigned.groupBy(
         "rule_id",
         "group_id",
         "window_start",
@@ -98,29 +113,33 @@ def aggregate_windows(assigned: DataFrame) -> DataFrame:
         "agg_type",
         "limit_op",
         "limit",
-    ).agg(
-        F.sum("agg_input").alias("__sum"),
-        F.count("agg_input").alias("__cnt"),
-        F.min("agg_input").alias("__min"),
-        F.max("agg_input").alias("__max"),
-    )
+    ).agg(*partial_aggs())
+
+
+def gate_windows(partials: DataFrame) -> DataFrame:
+    """Partials → the engine's output rows: the ONE aggregate-value CASE,
+    threshold gate and rounding that every surface (batch, session, native
+    and live streaming) applies.
+
+    Input: rule_id, group_id, window_start, window_end, agg_type,
+    limit_op, limit and the partials __sum/__cnt/__min/__max (exact
+    decimals, or doubles in measure units). The value is the partial cast
+    to double (AVG = sum/count, Window.java:40-47); the HAVING gate keeps
+    rows where `value <op> limit` (A3), mirroring Rule.apply's
+    BigDecimal.compareTo switch (Rule.java:39-56) on the double value vs.
+    the decimal limit cast to double — deterministic because the partials
+    are exact before the cast. Output (Q9 enrichment — the reference
+    emits only the bare aggregate value, Window.java:58-63):
+      rule_id INT, group_id STRING, window_start BIGINT, window_end BIGINT,
+      agg_type STRING, agg_value DOUBLE (rounded for cross-engine hashing).
+    """
+    agg = F.col("agg_type")
     value = (
-        F.when(F.col("agg_type") == "SUM", F.col("__sum").cast("double"))
-        .when(F.col("agg_type") == "AVG", F.col("__sum").cast("double") / F.col("__cnt"))
-        .when(F.col("agg_type") == "MIN", F.col("__min").cast("double"))
+        F.when(agg == "SUM", F.col("__sum").cast("double"))
+        .when(agg == "AVG", F.col("__sum").cast("double") / F.col("__cnt"))
+        .when(agg == "MIN", F.col("__min").cast("double"))
         .otherwise(F.col("__max").cast("double"))
     )
-    return agg.withColumn("agg_value", value).drop("__sum", "__cnt", "__min", "__max")
-
-
-def apply_threshold(aggregated: DataFrame) -> DataFrame:
-    """HAVING gate: keep rows where `agg <op> limit` (A3).
-
-    Mirrors Rule.apply's BigDecimal.compareTo switch (Rule.java:39-56) as a
-    CASE over the six comparators. Comparison happens on the double
-    aggregate vs. the decimal limit cast to double — deterministic because
-    the aggregate itself is computed exactly (decimal) before the cast.
-    """
     lim = F.col("limit").cast("double")
     v = F.col("agg_value")
     op = F.col("limit_op")
@@ -132,10 +151,17 @@ def apply_threshold(aggregated: DataFrame) -> DataFrame:
         .when(op == "<", v < lim)
         .otherwise(v <= lim)
     )
-    return aggregated.filter(passed)
+    return partials.withColumn("agg_value", value).filter(passed).select(
+        "rule_id",
+        "group_id",
+        "window_start",
+        "window_end",
+        "agg_type",
+        round_half_up("agg_value").alias("agg_value"),
+    )
 
 
-def evaluate_session_windows(fanned: DataFrame, round_digits: int = 4) -> DataFrame:
+def evaluate_session_windows(fanned: DataFrame) -> DataFrame:
     """Gap-based session windows — an engine extension beyond the
     reference's tumbling/sliding/global triple (CEPEngine.java:75-81).
 
@@ -161,32 +187,18 @@ def evaluate_session_windows(fanned: DataFrame, round_digits: int = 4) -> DataFr
         "agg_type",
         "limit_op",
         "limit",
-    ).agg(
-        F.sum("agg_input").alias("__sum"),
-        F.count("agg_input").alias("__cnt"),
-        F.min("agg_input").alias("__min"),
-        F.max("agg_input").alias("__max"),
-    )
-    value = (
-        F.when(F.col("agg_type") == "SUM", F.col("__sum").cast("double"))
-        .when(F.col("agg_type") == "AVG", F.col("__sum").cast("double") / F.col("__cnt"))
-        .when(F.col("agg_type") == "MIN", F.col("__min").cast("double"))
-        .otherwise(F.col("__max").cast("double"))
-    )
-    gated = apply_threshold(w.withColumn("agg_value", value))
-    return gated.select(
-        "rule_id",
-        "group_id",
-        F.col("__w.start").cast("long").alias("window_start"),
-        F.col("__w.end").cast("long").alias("window_end"),
-        "agg_type",
-        round_half_up("agg_value", round_digits).alias("agg_value"),
+    ).agg(*partial_aggs())
+    return gate_windows(
+        w.withColumns({
+            "window_start": F.col("__w.start").cast("long"),
+            "window_end": F.col("__w.end").cast("long"),
+        })
     )
 
 
-def round_half_up(col, digits: int = 4):
+def round_half_up(col, digits: int = ROUND_DIGITS):
     """floor(x·10^d + 0.5)/10^d — the ONE rounding formula every engine
-    surface (batch, live streaming, DuckDB oracle) applies to agg_value.
+    surface (gate_windows) and the DuckDB oracle apply to agg_value.
 
     F.round (JVM BigDecimal HALF_UP on the double's shortest decimal
     repr) and DuckDB's round() (scaled-multiply on the raw binary double)
@@ -194,27 +206,20 @@ def round_half_up(col, digits: int = 4):
     exact cents whose double quotient prints as ...22.86125: Spark
     rounded it 22.8613, DuckDB 22.8612 (found by cep_many_rules at
     sf0.01). The floor form is pure double arithmetic — multiply, add,
-    floor — reproducible bit-for-bit in Spark, Python, and DuckDB since
+    floor — reproducible bit-for-bit in Spark and DuckDB since
     the unrounded agg_value is itself identical (exact decimal sums /
     integer counts)."""
     scale = F.lit(float(10 ** digits))
     return (F.floor(F.col(col) * scale + F.lit(0.5)) / scale).cast("double")
 
 
-def evaluate_windows(fanned: DataFrame, round_digits: int = 4) -> DataFrame:
-    """Full W+A pipeline: assign → aggregate → threshold → enriched output.
+def evaluate_windows(fanned: DataFrame, round_digits: int = ROUND_DIGITS) -> DataFrame:
+    """Full W+A pipeline: assign → aggregate → gate (gate_windows'
+    output schema).
 
-    Output (Q9 enrichment — the reference emits only the bare aggregate
-    value, Window.java:58-63; we emit full context):
-      rule_id INT, group_id STRING, window_start BIGINT, window_end BIGINT,
-      agg_type STRING, agg_value DOUBLE (rounded for cross-engine hashing).
-    """
-    gated = apply_threshold(aggregate_windows(assign_windows(fanned)))
-    return gated.select(
-        "rule_id",
-        "group_id",
-        "window_start",
-        "window_end",
-        "agg_type",
-        round_half_up("agg_value", round_digits).alias("agg_value"),
-    )
+    `round_digits` is deprecated and kept only so the signature stays
+    stable for existing callers: agg_value is always rounded to
+    ROUND_DIGITS, the oracle's precision, and any other value raises."""
+    if round_digits != ROUND_DIGITS:
+        raise ValueError(f"agg_value is rounded to {ROUND_DIGITS} digits")
+    return gate_windows(aggregate_windows(assign_windows(fanned)))

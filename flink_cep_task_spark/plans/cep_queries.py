@@ -1078,10 +1078,10 @@ def q_rule_update_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING parity query — MID-REPLAY RULE UPSERT (SURVEY quirk Q6
     made checkable): rule 8's limit changes 2500 → 3500 between the two
     drains. Windows the watermark closed under v1 stay gated at 2500;
-    every window still open at the upsert fires under v2 — the dynamic
-    operator's "config as of the key's latest data" (live.py pdf.iloc[-1]
-    / fanout seq column) semantics, which the oracle replays via the
-    run-1 watermark cutoff. (The reference never re-delivers an updated
+    every window still open at the upsert fires under v2 — the live
+    gate joins each closing window's partials with the rule table of
+    its closing micro-batch (streaming/live.build_live_cep), which the
+    oracle replays via the run-1 watermark cutoff. (The reference never re-delivers an updated
     rule to existing groups, CEPEngine.java:55-64; our next-batch
     semantics is the documented divergence.)"""
     return _run_two_phase_live(

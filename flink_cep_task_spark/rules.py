@@ -6,9 +6,11 @@ resources/rules:1, lifecycle handling PartitionEngine.java:54-63.
 
 Design (SURVEY.md §3.2): rules live in a small DataFrame. Instead of the
 reference's per-task mutable BroadcastState map, we *compact* the rule
-changelog declaratively — last writer (highest seq) wins per rule_id,
-DELETE tombstones drop the rule — and broadcast-join the compacted ACTIVE
-set against the metric stream each batch. Rule updates therefore take
+changelog — last writer (highest seq) wins per rule_id, DELETE
+tombstones drop the rule — once, before any plan reads it (batch plans:
+compact_rule_list; the live engine: its RuleFileStore keeps only the
+current rules), and broadcast-join the ACTIVE set against the metric
+stream each batch. Rule updates therefore take
 effect at the next micro-batch boundary, fixing reference quirk Q6 (stale
 rule captured per group, CEPEngine.java:55-64).
 """
@@ -272,7 +274,9 @@ def compact_rules(changelog: DataFrame) -> DataFrame:
     Replaces BroadcastState upsert/remove (PartitionEngine.java:54-63):
     for each rule_id keep the highest-seq version; a DELETE tombstone
     removes the rule entirely. Pure DataFrame ops — at scale this is a tiny
-    aggregation over the (small) rule table, never a bottleneck.
+    aggregation over the (small) rule table, never a bottleneck. The
+    DataFrame twin of compact_rule_list; no engine plan calls it, since
+    the live store is compacted on write.
     """
     w = Window.partitionBy("rule_id").orderBy(F.col("seq").desc())
     return (

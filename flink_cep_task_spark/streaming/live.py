@@ -14,18 +14,22 @@ this correct (probed, not assumed):
      invisible, and lines that START beyond a file's original byte length
      are dropped by the line reader.
 
-Hence the store keeps the ENTIRE rule changelog as ONE JSON array on ONE
-line of ONE file, atomically replaced on every upsert/delete: the line
-reader always consumes line 1 to its true end, so growth is safe. Each
-document is validated ONCE, when it enters the store (Rule.from_wire —
-the engine's only wire parser; a bad document raises and is never
-written), and stored in canonical wire form, so the plan's side is a
-plain typed read (rules_from_store → compact_rules) that re-resolves the
-ACTIVE rule set every micro-batch with no aliasing, coercion or
-validation. A rule change therefore takes effect at the next trigger —
-the Spark-idiomatic equivalent of Flink's broadcast state upsert, and
-strictly better than the reference's quirk Q6 (rules captured per group
-at first sight, never invalidated, CEPEngine.java:55-64).
+Hence the store keeps the CURRENT rules — the latest validated version
+of each rule, ACTIVE or PAUSE, keyed by rule_id; a DELETE removes the
+rule — as ONE JSON array on ONE line of ONE file, atomically replaced on
+every upsert/delete: the line reader always consumes line 1 to its true
+end, so growth is safe, and the file grows with the number of rules,
+not the number of changes. Each document is validated ONCE, when it
+enters the store (Rule.from_wire — the engine's only wire parser; a bad
+document raises and is never written), and stored in canonical wire
+form, so the plan's side is a plain typed read (rules_from_store, then a
+rule_state = 'ACTIVE' filter — no per-batch compaction, no shuffle) that
+re-resolves the ACTIVE rule set every micro-batch with no aliasing,
+coercion or validation. A rule change therefore takes effect at the next
+trigger — the Spark-idiomatic equivalent of Flink's broadcast state
+upsert, and strictly better than the reference's quirk Q6 (rules
+captured per group at first sight, never invalidated,
+CEPEngine.java:55-64).
 
 Windowing: rules are data, so window sizes are COLUMNS — the built-in
 `F.window()` (literal durations) cannot express them. A single
@@ -33,34 +37,38 @@ applyInPandasWithState operator maintains per-(group, window) partial
 aggregates (sum/cnt/min/max: O(1) state per window, never raw rows) and
 closes a window exactly when the event-time watermark passes its end (the
 principled fix of the reference's wall-clock Trigger, Q4; a data-driven
-fire would double-emit under in-watermark reordering). The threshold uses
-the latest rule config the key has seen: an upsert re-gates every window
-fired after the key's next event; windows flushed purely by watermark
-after a config change still gate with the prior config (per-key state
-cannot observe the store without data). Spark does NOT filter late rows
-ahead of a stateful operator (measured — unlike built-in windowed aggs),
-so the operator itself discards any assigned window whose end precedes
-the current watermark: that window already fired (or would have fired
-empty), and merging a late row into it would resurrect it and double-emit
-in append mode.
+fire would double-emit under in-watermark reordering). The state holds
+no rule config: the operator emits every closed window's partials, and
+one stream-static join against the rule table of the closing micro-batch
+picks the aggregate, applies the threshold and rounds
+(operators.windows.gate_windows). A window is emitted only if its rule's
+current version is ACTIVE and still defines a window of that shape, so
+a delete, pause, re-limit, re-aggregate or resize applies to every
+window that closes after it — also one that only the watermark closes.
+Spark does NOT filter late rows ahead of a stateful operator (measured —
+unlike built-in windowed aggs), so the operator itself discards any
+assigned window whose end precedes the current watermark: that window
+already fired (or would have fired empty), and merging a late row into
+it would resurrect it and double-emit in append mode.
 
 STATE COARSENING (the load-bearing scale decision): the operator is keyed
 by (rule_id, hash_bucket(group_id)), NOT by raw (rule_id, group_id) — the
 reference's keyBy (CEPTaskRunner.java:46) maps to the SHUFFLE distribution
-either way, but PySpark's applyInPandasWithState pays a measured ~1 ms of
-per-KEY protocol overhead per micro-batch (one Arrow exchange + state
-round trip per key; measured 6.7 s for 8 000 trivial keys regardless of
-partition count or output size). Keying by raw group id means
-O(distinct groups) × 1 ms per batch — unusable at millions of groups.
-Each bucket key instead carries the state of MANY groups as parallel
-arrays, and the update function aggregates all of a bucket's rows in one
-vectorized pandas/numpy pass, so per-batch cost is O(buckets) × 1 ms +
-O(rows) vectorized. Buckets are sized ∝ total cores (64 default — far
-above local parallelism, far below the key-overhead regime); results are
+either way, but PySpark's applyInPandasWithState pays a fixed cost per
+KEY per micro-batch: measured on the live_rules benchmark at ~12 ms of
+task time per key, ~4 ms of it inside `update` (pandas fixed cost), the
+rest the Arrow exchange + state round trip. Keying by raw group id means
+O(distinct groups) × that cost per batch — unusable at millions of
+groups. Each bucket key instead carries the state of MANY groups as
+parallel arrays, and the update function aggregates all of a bucket's
+rows in one vectorized pandas/numpy pass, so per-batch cost is
+O(buckets) × the per-key cost + O(rows) vectorized. Buckets are sized ∝
+total cores (64 default — far above local parallelism); results are
 bucket-independent, only the shuffle/state layout changes.
 
 Scale: state is hash-partitioned by (rule_id, bucket); per-group state is
-a handful of ints per open window; the rule table is KBs and broadcast.
+a handful of ints per open window; the rule table is KBs and broadcast
+(once to the fan-out, once to the gate).
 No driver-side loops.
 """
 
@@ -80,26 +88,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
-from flink_cep_task_spark.operators.windows import apply_threshold
-from flink_cep_task_spark.operators.windows import round_half_up as _round_half_up_col
-from flink_cep_task_spark.rules import WIRE_NAMES, Rule, compact_rules
+from flink_cep_task_spark.operators.windows import gate_windows, partial_aggs
+from flink_cep_task_spark.rules import WIRE_NAMES, Rule
 from flink_cep_task_spark.schemas import RULE_SCHEMA
 
 SECONDS_PER_MINUTE = 60
 DEFAULT_STATE_BUCKETS = 64  # per rule; raise ∝ cluster cores at scale
 
 # partials are integer CENTS (measures are DECIMAL(18,2) engine-wide):
-# integer accumulation is exact and order-independent, so the final doubles
-# are bit-identical to the batch engine's decimal-sum-cast-double — live
-# streaming results hash-match the same DuckDB oracle as the batch plans.
+# integer accumulation is exact and order-independent, and a closed
+# window's partials leave the operator as cents / 100.0 — bit-identical to
+# the batch engine's decimal-sum-cast-double, so live streaming results
+# hash-match the same DuckDB oracle as the batch plans.
 # One state row per (rule, bucket): entry i of the parallel arrays is one
 # open (group, window) with its partials (see "state coarsening" above).
 LIVE_STATE_SCHEMA = (
-    "agg_type STRING, limit_op STRING, lim DOUBLE, "
     "gids ARRAY<STRING>, wstarts ARRAY<LONG>, wsizes ARRAY<LONG>, "
     "sums ARRAY<LONG>, cnts ARRAY<LONG>, "
     "mins ARRAY<LONG>, maxs ARRAY<LONG>"
 )
+# what the operator emits per closed window, in measure units
+_PARTIALS_SCHEMA = (
+    "rule_id INT, group_id STRING, window_start LONG, window_end LONG, "
+    "__sum DOUBLE, __cnt LONG, __min DOUBLE, __max DOUBLE"
+)
+# the live engine's output rows (gate_windows), as its sinks read them back
 LIVE_OUTPUT_SCHEMA = (
     "rule_id INT, group_id STRING, window_start LONG, window_end LONG, "
     "agg_type STRING, agg_value DOUBLE"
@@ -107,42 +120,48 @@ LIVE_OUTPUT_SCHEMA = (
 
 
 class RuleFileStore:
-    """Rule changelog as one single-line JSON-array file, atomically
-    replaced on every change — the live engine's control channel.
+    """The current rule table as one single-line JSON-array file,
+    atomically replaced on every change — the live engine's control
+    channel.
 
-    Validates on write: every document goes through Rule.from_wire, and
-    one that fails raises ValueError and is not stored. Entries are the
-    canonical wire documents (Rule.to_wire) with the store's own `seq`
-    in place of any the document carried, so last-writer-wins compaction
-    follows write order (the reference relies on socket arrival order)."""
+    Holds the latest version of each rule (ACTIVE or PAUSE), keyed by
+    rule_id: an upsert replaces the rule's entry, a DELETE (delete(), or
+    an upserted ruleState DELETE) removes it (PartitionEngine.java:54-63
+    BroadcastState put/remove). Validates on write: every document goes
+    through Rule.from_wire, and one that fails raises ValueError and is
+    not stored. Entries are the canonical wire documents (Rule.to_wire)
+    with the store's own write counter as `seq` in place of any the
+    document carried — last writer wins in write order (the reference
+    relies on socket arrival order)."""
 
     def __init__(self, path: str):
         self.path = path
-        self._log: list[dict] = []
+        self._rules: dict[int, dict] = {}
         self._seq = 0
         self._flush()
 
     def upsert(self, doc: dict) -> None:
-        """Add/replace a rule (ruleState ACTIVE/PAUSE) by ruleId."""
-        self._append(doc)
-
-    def delete(self, rule_id: int) -> None:
-        """Tombstone a rule (PartitionEngine.java:60-61 state.remove)."""
-        self._append({"ruleId": rule_id, "ruleState": "DELETE"})
-
-    def _append(self, doc: dict) -> None:
+        """Add/replace a rule (ruleState ACTIVE/PAUSE) by ruleId; a
+        ruleState DELETE document removes it."""
         rule = replace(Rule.from_wire(doc), seq=self._seq + 1)
         self._seq = rule.seq
-        self._log.append(rule.to_wire())
+        if rule.rule_state == "DELETE":
+            self._rules.pop(rule.rule_id, None)
+        else:
+            self._rules[rule.rule_id] = rule.to_wire()
         self._flush()
+
+    def delete(self, rule_id: int) -> None:
+        """Remove a rule (PartitionEngine.java:60-61 state.remove)."""
+        self.upsert({"ruleId": rule_id, "ruleState": "DELETE"})
 
     def _flush(self) -> None:
         # atomic single-line replace: readers see either the old or the new
-        # complete changelog, never a torn write.
+        # complete rule table, never a torn write.
         d = os.path.dirname(self.path) or "."
         fd, tmp = tempfile.mkstemp(dir=d, prefix=".rules-")
         with os.fdopen(fd, "w") as f:
-            f.write(json.dumps(self._log))
+            f.write(json.dumps(list(self._rules.values())))
         os.replace(tmp, self.path)
 
 
@@ -157,7 +176,8 @@ _STORED_RULES = ArrayType(
 
 
 def rules_from_store(spark: SparkSession, path: str) -> DataFrame:
-    """Static-side rule table: the single-line JSON array of validated
+    """Static-side rule table: the store's current rules (one row per
+    rule_id, ACTIVE or PAUSE) — the single-line JSON array of validated
     wire docs, read with one typed from_json, exploded and renamed to
     RULE_SCHEMA. Re-executed (and the file re-READ) every micro-batch
     when joined against a stream."""
@@ -171,34 +191,26 @@ def rules_from_store(spark: SparkSession, path: str) -> DataFrame:
     ])
 
 
-def _round_half_up(v: float, digits: int) -> float:
-    """floor(x·10^d + 0.5)/10^d — the engine-wide agg_value rounding
-    (operators.windows.round_half_up); pure double arithmetic so the
-    Python live path, the JVM batch path, and the DuckDB oracle agree
-    bit-for-bit even when x·10^d sits within one ulp of a half."""
-    import math
-
-    scale = float(10 ** digits)
-    return math.floor(v * scale + 0.5) / scale
-
-
 def live_cep_windows(
     fanned: DataFrame,
-    round_digits: int = 4,
     state_buckets: int = DEFAULT_STATE_BUCKETS,
 ) -> DataFrame:
-    """Dynamic-window stateful aggregation over rule-stamped metric rows.
+    """Dynamic-window stateful fold over rule-stamped metric rows: emits
+    every window the watermark closes as its partials (_PARTIALS_SCHEMA:
+    rule_id, group_id, window_start, window_end, __sum, __cnt, __min,
+    __max in measure units), UNGATED — agg choice, threshold and rounding
+    happen downstream against the current rule table (build_live_cep).
 
     Input must be a STREAMING DataFrame with a watermark on event_time and
-    the fanout_rules output columns. Global-window rules have no window end
-    and never fire in this append-mode operator (reference quirk Q5 — its
-    AllWindowAssigner windows also never fire); route them to the
-    update-mode path in streaming/pipeline.py instead.
+    the fanout_rules output columns plus `agg_cents`. Global-window rules
+    have no window end and never fire in this append-mode operator
+    (reference quirk Q5 — its AllWindowAssigner windows also never fire);
+    route them to run_live_cep_global's update-mode path instead.
 
     Keyed by (rule_id, hash_bucket(group_id)) with vectorized intra-bucket
     aggregation — see the module docstring's state-coarsening rationale.
-    Config (agg/threshold) is uniform per rule, so bucket-level config
-    refresh is semantically identical to group-level.
+    The window spec is read from the batch's rows; the state holds no
+    rule config.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -210,28 +222,23 @@ def live_cep_windows(
         wm_s = wm_ms // 1000
 
         # open_w: (group_id, window_start_s, window_size_s) -> [sum, cnt, min, max]
+        open_w = {}
         if state.exists:
-            agg_type, limit_op, lim, gids, wstarts, wsizes, sums, cnts, mins, maxs = state.get
+            gids, wstarts, wsizes, sums, cnts, mins, maxs = state.get
             open_w = {
                 (gids[i], int(wstarts[i]), int(wsizes[i])): [
                     int(sums[i]), int(cnts[i]), int(mins[i]), int(maxs[i])
                 ]
                 for i in range(len(gids))
             }
-        else:
-            agg_type, limit_op, lim, open_w = None, None, None, {}
 
         if not state.hasTimedOut:
             for pdf in pdfs:
                 if not len(pdf):
                     continue
-                # rule config rides on every row; latest batch wins (mid-
-                # stream upserts change the threshold for yet-unfired
-                # windows). Uniform within the key: config is per-rule.
+                # the window spec rides on every row, uniform within the
+                # key: one rule, one rule-table read per micro-batch
                 last = pdf.iloc[-1]
-                agg_type = str(last["agg_type"])
-                limit_op = str(last["limit_op"])
-                lim = float(last["limit"])
                 wtype = str(last["window_type"])
                 size_s = int(last["window_minutes"]) * SECONDS_PER_MINUTE
                 slide_m = last["window_slide_minutes"]
@@ -330,33 +337,13 @@ def live_cep_windows(
             end_s = start_s + size_s
             if end_s <= wm_s:
                 s, c, mn, mx = open_w.pop(k)
-                # cents → double exactly as the batch engine does it
-                # (decimal sum cast double, then /count for AVG)
-                value = {
-                    "SUM": s / 100.0,
-                    "AVG": (s / 100.0) / c,
-                    "MIN": mn / 100.0,
-                    "MAX": mx / 100.0,
-                }[agg_type]
-                ok = {
-                    "=": value == lim,
-                    "!=": value != lim,
-                    ">": value > lim,
-                    ">=": value >= lim,
-                    "<": value < lim,
-                    "<=": value <= lim,
-                }[limit_op]
-                if ok:
-                    fired.append((rule_id, gid, start_s, end_s,
-                                  agg_type, _round_half_up(value, round_digits)))
+                fired.append((rule_id, gid, start_s, end_s,
+                              s / 100.0, c, mn / 100.0, mx / 100.0))
 
         if open_w:
             keys = sorted(open_w)
             state.update(
                 (
-                    agg_type,
-                    limit_op,
-                    lim,
                     [k[0] for k in keys],
                     [k[1] for k in keys],
                     [k[2] for k in keys],
@@ -371,14 +358,13 @@ def live_cep_windows(
         elif state.exists:
             # nothing in flight: drop the state row entirely so deleted
             # rules / retired groups don't accumulate in the state store
-            # (new events re-supply the rule config).
             state.remove()
         if fired:
             yield pd.DataFrame(
                 fired,
                 columns=[
                     "rule_id", "group_id", "window_start", "window_end",
-                    "agg_type", "agg_value",
+                    "__sum", "__cnt", "__min", "__max",
                 ],
             )
 
@@ -391,11 +377,10 @@ def live_cep_windows(
     slim = windowed.select(
         "rule_id", "bucket", "group_id", "event_time", "agg_cents",
         "window_type", "window_minutes", "window_slide_minutes",
-        "agg_type", "limit_op", F.col("limit").cast("double").alias("limit"),
     )
     return slim.groupBy("rule_id", "bucket").applyInPandasWithState(
         update,
-        outputStructType=LIVE_OUTPUT_SCHEMA,
+        outputStructType=_PARTIALS_SCHEMA,
         stateStructType=LIVE_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
@@ -410,52 +395,84 @@ def build_live_cep(
     state_buckets: int = DEFAULT_STATE_BUCKETS,
 ) -> DataFrame:
     """Full live pipeline: metric stream × per-batch-refreshed rule table →
-    dynamic-window stateful CEP. Output schema matches the batch engine
-    (evaluate_windows), so streaming results are directly comparable.
+    dynamic-window stateful fold → gate. Output schema matches the batch
+    engine (LIVE_OUTPUT_SCHEMA = gate_windows' output), so streaming
+    results are directly comparable.
+
+    Both the fan-out and the gate read the store's ACTIVE rules in the
+    same plan, re-read every micro-batch. The gate inner-joins each
+    closed window's partials with its rule's CURRENT version and emits
+    the window only if that version still defines a window of the same
+    shape — tumbling/sliding: the same size and a start aligned to the
+    current slide; session: the same gap — so a window closed after a
+    delete, pause or resize emits nothing, and one closed after a
+    re-limit or re-aggregate is gated with the new config.
+
+    The operator's state layout (LIVE_STATE_SCHEMA: no agg_type/limit_op/
+    lim) and the session branches' aggregation buffer (no latest-config
+    pick) differ from those of earlier versions, so a live query must
+    start from a fresh checkpointLocation after an upgrade; state written
+    with the old layout cannot be resumed.
 
     Covers tumbling/sliding rules DYNAMICALLY (window size is a column —
     add/resize mid-run, next batch applies it) and session rules via
     native F.session_window branches built from the store's gaps AT PLAN
     TIME: session state lives in Spark's session-merging state store,
     whose gap must be a literal, so a session rule with a BRAND-NEW gap
-    needs a restart (gaps are snapshotted from the whole changelog
-    including PAUSEd rules, so pausing/unpausing or re-adding an existing
-    gap works mid-run; threshold/agg upserts apply via max_by(seq) config
-    selection — "config as of the session's latest data", the same
-    semantics the dynamic operator documents). Global-window rules
-    (unbounded, never fire in append mode — reference quirk Q5) run
-    through run_live_cep_global's update-mode path instead."""
+    needs a restart. The gaps are snapshotted from the stored ACTIVE and
+    PAUSE rules, so pausing/unpausing works mid-run; a gap held only by a
+    deleted or superseded rule version is no longer in the store and
+    gets no branch. Global-window rules (unbounded, never fire in append
+    mode — reference quirk Q5) run through run_live_cep_global's
+    update-mode path instead."""
     rules = rules_from_store(spark, rule_store_path)
-    compacted = compact_rules(rules)
+    active = rules.filter(F.col("rule_state") == "ACTIVE")
     # second-truncate before the watermark: the engine's time domain is
     # epoch seconds (see build_streaming_cep) — session-merge distances
     # in the native session branch must match the batch islands exactly
     wm = metrics.withColumn(
         "event_time", F.date_trunc("second", F.col("event_time"))
     ).withWatermark("event_time", watermark)
-    fanned = fanout_rules(wm, compacted).withColumn(
+    fanned = fanout_rules(wm, active).withColumn(
         # DECIMAL(18,2) × 100 → exact integer cents (see LIVE_STATE_SCHEMA)
         "agg_cents",
         (F.col("agg_input") * 100).cast("long"),
     )
-    out = live_cep_windows(
+    current = F.broadcast(active.select(
+        "rule_id", "window_type", "window_minutes", "window_slide_minutes",
+        "agg_type", "limit_op", "limit",
+    ))
+    size_s = F.col("window_minutes").cast("long") * SECONDS_PER_MINUTE
+    # a tumbling rule may carry a windowSlideMinute; like the window
+    # assignment and the oracle, the gate ignores it (tumbling = size grid)
+    slide_s = (
+        F.when(F.col("window_type") == "sliding", F.col("window_slide_minutes"))
+        .otherwise(F.col("window_minutes")).cast("long")
+        * SECONDS_PER_MINUTE
+    )
+    partials = live_cep_windows(
         fanned.filter(F.col("window_type") != "session"),
         state_buckets=state_buckets,
     )
-    # session gaps known at build time: collected from the stored
-    # changelog itself (tiny control-plane collect — works for any store
-    # path spark.read.text can resolve, local or remote). ALL changelog
-    # entries contribute, not just currently-ACTIVE ones, so a PAUSEd
-    # rule's gap has a live branch the moment it re-activates; only a
-    # gap never seen before plan time needs a restart. Tombstones are
-    # stored as global rules, so they never add a gap.
+    out = gate_windows(
+        partials.join(current, "rule_id").filter(
+            F.col("window_type").isin("tumbling", "sliding")
+            & (F.col("window_end") - F.col("window_start") == size_s)
+            & (F.pmod(F.col("window_start"), slide_s) == 0)
+        )
+    )
+    # session gaps known at build time: collected from the stored rules
+    # (tiny control-plane collect — works for any store path
+    # spark.read.text can resolve, local or remote). PAUSEd rules count
+    # too, so a paused rule's gap has a live branch the moment it
+    # re-activates; only a gap not in the store at plan time needs a
+    # restart.
     session_gaps = sorted(
         int(r.window_minutes)
         for r in rules.filter(F.col("window_type") == "session")
         .select("window_minutes")
         .distinct()
         .collect()
-        if r.window_minutes
     )
     for gap in session_gaps:
         part = fanned.filter(
@@ -464,52 +481,22 @@ def build_live_cep(
         )
         # config (agg/threshold) must NOT be a grouping key: a mid-run
         # upsert would fork the session state and emit overlapping
-        # duplicate windows. Partials are config-free; the gating config
-        # is the highest-seq version among the session's own rows —
-        # exactly the dynamic operator's "config as of the key's latest
-        # data" semantics.
-        agg = part.groupBy(
+        # duplicate windows. The partials are config-free; the gate
+        # supplies the current config.
+        sessions = part.groupBy(
             "rule_id",
             "group_id",
             F.session_window("event_time", f"{gap} minutes").alias("w"),
-        ).agg(
-            F.sum("agg_input").alias("__sum"),
-            F.count("agg_input").alias("__cnt"),
-            F.min("agg_input").alias("__min"),
-            F.max("agg_input").alias("__max"),
-            F.max_by(
-                F.struct("agg_type", "limit_op", "limit"), "seq"
-            ).alias("__cfg"),
-        )
-        value = (
-            F.when(F.col("__cfg.agg_type") == "SUM", F.col("__sum").cast("double"))
-            .when(
-                F.col("__cfg.agg_type") == "AVG",
-                F.col("__sum").cast("double") / F.col("__cnt"),
+        ).agg(*partial_aggs()).withColumns({
+            "window_start": F.col("w.start").cast("long"),
+            "window_end": F.col("w.end").cast("long"),
+        })
+        out = out.unionByName(gate_windows(
+            sessions.join(current, "rule_id").filter(
+                (F.col("window_type") == "session")
+                & (F.col("window_minutes") == gap)
             )
-            .when(F.col("__cfg.agg_type") == "MIN", F.col("__min").cast("double"))
-            .otherwise(F.col("__max").cast("double"))
-        )
-        gated = apply_threshold(
-            agg.select(
-                "rule_id",
-                "group_id",
-                F.col("w.start").cast("long").alias("window_start"),
-                F.col("w.end").cast("long").alias("window_end"),
-                F.col("__cfg.agg_type").alias("agg_type"),
-                F.col("__cfg.limit_op").alias("limit_op"),
-                F.col("__cfg.limit").alias("limit"),
-                value.alias("agg_value"),
-            )
-        ).select(
-            "rule_id",
-            "group_id",
-            "window_start",
-            "window_end",
-            "agg_type",
-            _round_half_up_col("agg_value", 4).alias("agg_value"),
-        )
-        out = out.unionByName(gated)
+        ))
     return out
 
 
@@ -523,8 +510,8 @@ def run_live_cep_global(
 ):
     """Global-window rules, LIVE: running per-(rule, group) aggregates in
     UPDATE mode (reference AllWindowAssigner windows never end — quirk Q5 —
-    so results are continuous, not fired), with the threshold applied in
-    foreachBatch against a FRESH read of the rule store — rule upserts
+    so results are continuous, not fired), gated in foreachBatch against a
+    FRESH read of the rule store's ACTIVE global rules — rule upserts
     change both matching (in-plan fan-out) and gating (sink side) at the
     next micro-batch.
 
@@ -535,40 +522,25 @@ def run_live_cep_global(
     `sink(batch_df, batch_id)` receives gated rows with the engine's
     standard output schema (window bounds NULL for global windows).
     """
-    rules = rules_from_store(spark, rule_store_path)
-    compacted = compact_rules(rules)
-    fanned = fanout_rules(metrics, compacted).filter(
-        F.col("window_type") == "global"
-    ).withColumn("agg_cents", (F.col("agg_input") * 100).cast("long"))
-    agg = fanned.groupBy("rule_id", "group_id").agg(
-        F.sum("agg_cents").alias("__sum"),
-        F.count("agg_cents").alias("__cnt"),
-        F.min("agg_cents").alias("__min"),
-        F.max("agg_cents").alias("__max"),
+    fanned = fanout_rules(metrics, rules_from_store(spark, rule_store_path))
+    agg = (
+        fanned.filter(F.col("window_type") == "global")
+        .groupBy("rule_id", "group_id")
+        .agg(*partial_aggs())
     )
 
     def gate(batch_df, batch_id: int) -> None:
         # fresh read — foreachBatch runs driver-side, so the store's file
         # listing is NOT frozen at plan time here
-        cfg = compact_rules(rules_from_store(spark, rule_store_path)).select(
-            "rule_id", "agg_type", "limit_op", "limit"
-        )
-        j = batch_df.join(F.broadcast(cfg), "rule_id")
-        value = (
-            F.when(F.col("agg_type") == "SUM", F.col("__sum") / 100.0)
-            .when(F.col("agg_type") == "AVG", (F.col("__sum") / 100.0) / F.col("__cnt"))
-            .when(F.col("agg_type") == "MIN", F.col("__min") / 100.0)
-            .otherwise(F.col("__max") / 100.0)
-        )
-        out = apply_threshold(j.withColumn("agg_value", value)).select(
-            "rule_id",
-            "group_id",
-            F.lit(None).cast("long").alias("window_start"),
-            F.lit(None).cast("long").alias("window_end"),
-            "agg_type",
-            _round_half_up_col("agg_value", 4).alias("agg_value"),
-        )
-        sink(out, batch_id)
+        current = rules_from_store(spark, rule_store_path).filter(
+            (F.col("rule_state") == "ACTIVE") & (F.col("window_type") == "global")
+        ).select("rule_id", "agg_type", "limit_op", "limit")
+        sink(gate_windows(
+            batch_df.join(F.broadcast(current), "rule_id").withColumns({
+                "window_start": F.lit(None).cast("long"),
+                "window_end": F.lit(None).cast("long"),
+            })
+        ), batch_id)
 
     q = (
         agg.writeStream.outputMode("update")

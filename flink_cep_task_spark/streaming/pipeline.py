@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
-from flink_cep_task_spark.operators.windows import apply_threshold, round_half_up
+from flink_cep_task_spark.operators.windows import gate_windows, partial_aggs
 from flink_cep_task_spark.rules import Rule, compact_rule_list, rules_df
 from flink_cep_task_spark.sources.jsonline import parse_metric_lines
 
@@ -94,9 +94,10 @@ def rules_socket_to_store(
 ):
     """Bridge the reference's rule socket (8888, CEPTaskRunner.java:37-45)
     into the live engine's rule channel: every JSON line arriving on the
-    socket is appended to the RuleFileStore changelog, which the live
-    metric pipeline re-reads each micro-batch — Flink's broadcast-rule
-    stream re-expressed as socket → compacted control table.
+    socket is written to the RuleFileStore, which keeps the current
+    version of each rule (an upsert replaces it, a DELETE removes it) and
+    which the live metric pipeline re-reads each micro-batch — Flink's
+    broadcast-rule stream re-expressed as socket → current-rules table.
 
     A line that is not valid JSON or not a valid rule is dropped here —
     the store validates on write and raises ValueError (the reference's
@@ -212,32 +213,6 @@ def _window_specs(active: list[Rule]) -> dict[tuple, list[Rule]]:
     return groups
 
 
-def _agg_and_gate(grouped, extra_cols: list) -> DataFrame:
-    agg = grouped.agg(
-        F.sum("agg_input").alias("__sum"),
-        F.count("agg_input").alias("__cnt"),
-        F.min("agg_input").alias("__min"),
-        F.max("agg_input").alias("__max"),
-    )
-    value = (
-        F.when(F.col("agg_type") == "SUM", F.col("__sum").cast("double"))
-        .when(F.col("agg_type") == "AVG", F.col("__sum").cast("double") / F.col("__cnt"))
-        .when(F.col("agg_type") == "MIN", F.col("__min").cast("double"))
-        .otherwise(F.col("__max").cast("double"))
-    )
-    gated = apply_threshold(agg.withColumn("agg_value", value))
-    return gated.select(
-        "rule_id",
-        "group_id",
-        *extra_cols,
-        "agg_type",
-        # the ONE rounding formula every engine surface applies — F.round
-        # here would diverge from batch/live/oracle within one ulp of a
-        # half (see operators/windows.round_half_up)
-        round_half_up("agg_value", 4).alias("agg_value"),
-    )
-
-
 def build_streaming_cep(
     metrics: DataFrame,
     spark: SparkSession,
@@ -268,13 +243,13 @@ def build_streaming_cep(
         ids = [r.rule_id for r in specs]
         part = fanned.filter(F.col("rule_id").isin(ids))
         if wtype == "global":
-            grouped = part.groupBy("rule_id", "group_id", "agg_type", "limit_op", "limit")
-            g = _agg_and_gate(
-                grouped,
-                [
-                    F.lit(None).cast("long").alias("window_start"),
-                    F.lit(None).cast("long").alias("window_end"),
-                ],
+            g = gate_windows(
+                part.groupBy("rule_id", "group_id", "agg_type", "limit_op", "limit")
+                .agg(*partial_aggs())
+                .withColumns({
+                    "window_start": F.lit(None).cast("long"),
+                    "window_end": F.lit(None).cast("long"),
+                })
             )
             global_part = g if global_part is None else global_part.unionByName(g)
             continue
@@ -309,16 +284,16 @@ def build_streaming_cep(
             end_col = F.col("w.start").cast("long") + minutes * 60
         else:
             win = F.window("event_time", dur, f"{slide} minutes")
-        grouped = part.groupBy(
-            "rule_id", "group_id", win.alias("w"), "agg_type", "limit_op", "limit"
-        )
         windowed_parts.append(
-            _agg_and_gate(
-                grouped,
-                [
-                    F.col("w.start").cast("long").alias("window_start"),
-                    end_col.alias("window_end"),
-                ],
+            gate_windows(
+                part.groupBy(
+                    "rule_id", "group_id", win.alias("w"), "agg_type", "limit_op", "limit"
+                )
+                .agg(*partial_aggs())
+                .withColumns({
+                    "window_start": F.col("w.start").cast("long"),
+                    "window_end": end_col,
+                })
             )
         )
 

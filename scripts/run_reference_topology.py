@@ -5,8 +5,8 @@ localhost:9999 and rule JSON lines from localhost:8888, evaluates the
 live rule set, and prints threshold hits. This script is the drop-in
 equivalent: metric socket → live dynamic-window CEP (rule CRUD takes
 effect at the next micro-batch, fixing reference quirk Q6) → console
-sink; the rule socket feeds the engine's rule changelog through the
-socket→store bridge.
+sink; the rule socket feeds the engine's rule store (the current
+version of each rule) through the socket→store bridge.
 
 Usage (three terminals):
 

@@ -10,6 +10,7 @@ import os
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_cep_task_spark.plans.cep import evaluate_rules
@@ -47,7 +48,8 @@ R2_RULE = Rule(rule_id=2, window_type="sliding", window_minutes=10,
 
 
 def test_rule_file_store_compaction(spark, tmp_path):
-    """Store upserts/deletes → typed store read + compaction resolves the
+    """Store upserts/deletes → the store holds the current version of each
+    remaining rule, and the typed store read + compaction resolves the
     latest ACTIVE rule set (BroadcastState upsert/remove twin)."""
     store = RuleFileStore(str(tmp_path / "rules.json"))
     store.upsert(R1_WIRE)
@@ -55,7 +57,9 @@ def test_rule_file_store_compaction(spark, tmp_path):
     store.upsert({**R1_WIRE, "limit": 999})      # upsert: last writer wins
     store.upsert({**R2_WIRE, "ruleState": "PAUSE"})
     store.delete(2)                               # tombstone wins over PAUSE
-    compacted = compact_rules(rules_from_store(spark, store.path)).collect()
+    table = rules_from_store(spark, store.path)
+    assert [(r.rule_id, float(r.limit)) for r in table.collect()] == [(1, 999.0)]
+    compacted = compact_rules(table).collect()
     assert len(compacted) == 1
     assert compacted[0].rule_id == 1
     assert float(compacted[0].limit) == 999.0
@@ -170,6 +174,170 @@ def test_checkpoint_restart_resume(spark, tmp_path):
     assert n_run1 >= 1  # run 1 emitted at least its closed window(s)
 
 
+OPEN_WINDOW_RULE = {
+    "ruleId": 2, "windowType": "tumbling", "windowMinutes": 1,
+    "groupingKeyNames": ["t_event_type"], "aggregatorFunctionType": "SUM",
+    "aggregateFieldName": "value", "limitOperatorType": ">", "limit": 0,
+}
+OPEN_WINDOW_CHANGES = {
+    "delete": lambda store: store.delete(2),
+    "pause": lambda store: store.upsert({**OPEN_WINDOW_RULE, "ruleState": "PAUSE"}),
+    "relimit": lambda store: store.upsert({**OPEN_WINDOW_RULE, "limit": 100}),
+    "reagg": lambda store: store.upsert(
+        {**OPEN_WINDOW_RULE, "aggregatorFunctionType": "MAX"}),
+    "resize": lambda store: store.upsert({**OPEN_WINDOW_RULE, "windowMinutes": 2}),
+}
+
+
+@pytest.mark.parametrize("change", sorted(OPEN_WINDOW_CHANGES))
+def test_rule_change_gates_window_closed_by_watermark_only(spark, tmp_path, change):
+    """Rules 1 and 2 each open window [0, 60) for group x; rule 2 then
+    changes while the window is open, and a second run resuming the same
+    checkpoint moves ONLY the watermark past 60 — x's state key sees no
+    data, only its timeout. The emitted rows must be the oracle's over
+    the same events and the rule set in the store at that closing batch:
+    nothing for a deleted or paused rule, the new limit's verdict, the
+    new aggregate. A resized rule no longer defines the old window, so
+    no row may carry its old bounds."""
+    import duckdb
+
+    from flink_cep_task_spark.oracle import cep_oracle_sql
+
+    base_ms = 1_700_000_040_000  # 2-min epoch aligned
+    base_s = base_ms // 1000
+    events = [(10, 3), (20, 4)]  # (second offset, value) in group x
+    src = tmp_path / f"ow-{uuid.uuid4().hex[:8]}"
+    src.mkdir()
+    t0 = time.time() - 120
+
+    def write_file(idx: int, doc: dict) -> None:
+        p = src / f"{idx:04d}.json"
+        p.write_text(json.dumps(doc))
+        os.utime(p, (t0 + idx, t0 + idx))
+
+    store = RuleFileStore(str(tmp_path / "rules_ow.json"))
+    store.upsert({**OPEN_WINDOW_RULE, "ruleId": 1})
+    store.upsert(OPEN_WINDOW_RULE)
+    out_dir = str(tmp_path / "ow_out")
+    ckpt = str(tmp_path / "ckpt_ow")
+
+    def run_once() -> None:
+        metrics = metrics_stream_from_text(spark, str(src), max_files_per_trigger=1)
+        out = build_live_cep(metrics, spark, store.path, watermark="0 seconds")
+        q = (
+            out.writeStream.format("parquet").outputMode("append")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start()
+        )
+        await_stream(q, 120)
+
+    for i, (off, v) in enumerate(events):  # run 1: both windows stay open
+        write_file(i, {"eventTime": base_ms + off * 1000, "t_event_type": "x",
+                       "value": v})
+    run_once()
+
+    OPEN_WINDOW_CHANGES[change](store)
+    # run 2: two watermark pushers — wm advances at batch N's end, the
+    # timeouts fire in batch N+1
+    write_file(2, {"eventTime": base_ms + 12_000_000, "t_event_type": FLUSH_TAG, "value": 0})
+    write_file(3, {"eventTime": base_ms + 12_060_000, "t_event_type": FLUSH_TAG, "value": 0})
+    run_once()
+
+    got = sorted(
+        (r.rule_id, r.group_id, r.window_start - base_s, r.window_end - base_s,
+         r.agg_type, r.agg_value)
+        for r in spark.read.parquet(out_dir).collect()
+        if FLUSH_TAG not in r.group_id
+    )
+    assert (1, "1_x", 0, 60, "SUM", 7.0) in got, got
+    if change == "resize":
+        assert not [r for r in got if r[0] == 2 and r[2:4] == (0, 60)], got
+        return
+    with open(store.path) as fh:
+        live_rules = [Rule.from_wire(d) for d in json.load(fh)]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM (VALUES "
+        + ", ".join(f"(epoch_ms({base_ms + off * 1000}), 'x', {i}, {v})"
+                    for i, (off, v) in enumerate(events))
+        + ") AS t(ts, event_type, user_id, value)"
+    )
+    expected = sorted(
+        (r[0], r[1], r[2] - base_s, r[3] - base_s, r[4], r[5])
+        for r in con.execute(cep_oracle_sql(live_rules)).fetchall()
+    )
+    con.close()
+    assert got == expected
+
+
+def test_tumbling_rule_ignores_its_slide(spark, tmp_path):
+    """A tumbling rule may carry a windowSlideMinute; the window assignment,
+    the batch engine and the oracle all ignore it. The live gate must too:
+    a tumbling window is aligned to its size, not to the stray slide, so a
+    5-min window starting at 300 s (not a multiple of a 2-min slide) and
+    every 1-min window (most not multiples of a 5-min slide) still emit."""
+    import duckdb
+
+    from flink_cep_task_spark.oracle import cep_oracle_sql
+
+    base_ms = 1_700_000_040_000  # 2-min epoch aligned, 5-min not
+    base_s = base_ms // 1000
+    events = [(i * 30, 1 + i % 4) for i in range(40)]  # 20 minutes of group x
+    src = tmp_path / f"ts-{uuid.uuid4().hex[:8]}"
+    src.mkdir()
+    t0 = time.time() - 120
+    docs = [[{"eventTime": base_ms + off * 1000, "t_event_type": "x", "value": v}
+             for off, v in events[k:k + 10]] for k in range(0, len(events), 10)]
+    docs += [[{"eventTime": base_ms + 12_000_000 + j * 60_000,
+               "t_event_type": FLUSH_TAG, "value": 0}] for j in range(2)]
+    for idx, lines in enumerate(docs):
+        p = src / f"{idx:04d}.json"
+        p.write_text("\n".join(json.dumps(d) for d in lines))
+        os.utime(p, (t0 + idx, t0 + idx))
+
+    store = RuleFileStore(str(tmp_path / "rules_ts.json"))
+    store.upsert({**OPEN_WINDOW_RULE, "ruleId": 1, "windowMinutes": 5,
+                  "windowSlideMinute": 2})
+    store.upsert({**OPEN_WINDOW_RULE, "windowMinutes": 1, "windowSlideMinute": 5})
+    metrics = metrics_stream_from_text(spark, str(src), max_files_per_trigger=1)
+    out = build_live_cep(metrics, spark, store.path, watermark="0 seconds")
+    name = f"ts_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_ts"))
+        .trigger(availableNow=True).start()
+    )
+    await_stream(q, 120)
+    got = sorted(
+        (r.rule_id, r.group_id, r.window_start - base_s, r.window_end - base_s,
+         r.agg_type, r.agg_value)
+        for r in spark.table(name).collect()
+        if FLUSH_TAG not in r.group_id
+    )
+
+    with open(store.path) as fh:
+        rules = [Rule.from_wire(d) for d in json.load(fh)]
+    assert all(r.window_slide_minutes for r in rules)  # the slide is kept
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM (VALUES "
+        + ", ".join(f"(epoch_ms({base_ms + off * 1000}), 'x', {i}, {v})"
+                    for i, (off, v) in enumerate(events))
+        + ") AS t(ts, event_type, user_id, value)"
+    )
+    expected = sorted(
+        (r[0], r[1], r[2] - base_s, r[3] - base_s, r[4], r[5])
+        for r in con.execute(cep_oracle_sql(rules)).fetchall()
+    )
+    con.close()
+    # the 5-min windows start at base - 240 + 300k (the epoch is their
+    # grid); [60, 360) starts 60 s off the 2-min grid
+    assert [r for r in expected if r[0] == 1 and r[2:4] == (60, 360)]
+    assert len(expected) == 5 + 20
+    assert got == expected
+
+
 def test_live_global_rules_update_mode(spark, tmp_path):
     """Global-window rules through the LIVE path: running aggregates in
     update mode, threshold gated in foreachBatch against the freshly-read
@@ -249,10 +417,14 @@ def test_rule_midstream_upsert_and_delete(spark, tmp_path):
       phase B: more events flow                  → rule-7 windows fire for
                                                    phase-B events ONLY;
                                                    rule 1 stops matching,
-                                                   its in-flight window
-                                                   still flushes (strictly
-                                                   better than reference Q6,
-                                                   which leaks it forever)
+                                                   and its in-flight window
+                                                   emits nothing when the
+                                                   watermark closes it: it
+                                                   is gated against the
+                                                   current rules, like the
+                                                   batch engine and the
+                                                   oracle (the reference's
+                                                   Q6 leaks it forever)
     """
     base_ms = 1_700_000_040_000  # multiple of 120000 ⇒ 2-min epoch aligned
     mk = lambda i: {"eventTime": base_ms + i * 60_000, "t_g": "g0", "m": 1}
@@ -323,9 +495,9 @@ def test_rule_midstream_upsert_and_delete(spark, tmp_path):
                for r in rows if r.rule_id == 1}
     r7_rows = {(r.window_start - base_s, r.window_end - base_s, r.agg_value)
                for r in rows if r.rule_id == 7 and FLUSH_TAG not in r.group_id}
-    # rule 1 saw ONLY phase A (deleted before phase B): windows [0,2) and
-    # [2,4) minutes, SUM=2 each ([2,4) flushed by watermark after delete).
-    assert {(s, e) for s, e, _ in r1_rows} == {(0, 120), (120, 240)}
+    # rule 1 saw ONLY phase A (deleted before phase B): window [0,2)
+    # minutes, SUM=2; [2,4) closes after the delete and emits nothing.
+    assert {(s, e) for s, e, _ in r1_rows} == {(0, 120)}
     assert all(v == 2.0 for _s, _e, v in r1_rows)
     # rule 7 saw ONLY phase B: windows [4,6) and [6,8) minutes, MIN=1.
     assert {(s, e) for s, e, _ in r7_rows} == {(240, 360), (360, 480)}
@@ -372,8 +544,9 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
     """The reference's FULL dual-socket workflow (CEPTaskRunner.java:31,37)
     in one run: metrics arrive on one socket, rules on a second socket
     bridged into the live rule channel (rules_socket_to_store), and a
-    mid-run upsert+DELETE takes effect without restart — the socket twin
-    of test_rule_midstream_upsert_and_delete."""
+    mid-run upsert+DELETE takes effect without restart — the deleted
+    rule's in-flight window emits nothing — the socket twin of
+    test_rule_midstream_upsert_and_delete."""
     from flink_cep_task_spark.streaming.pipeline import (
         metric_source,
         rules_socket_to_store,
@@ -398,13 +571,17 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
             .trigger(processingTime="500 milliseconds").start()
         )
 
+        def stored() -> dict[int, dict]:
+            with open(store.path) as fh:
+                return {d["ruleId"]: d for d in json.load(fh)}
+
         def await_store(pred, what: str, timeout_s: float = 30.0):
             deadline = time.time() + timeout_s
             while time.time() < deadline:
-                if pred(store._log):
+                if pred(stored()):
                     return
                 time.sleep(0.2)
-            raise TimeoutError(f"rule store never saw {what}: {store._log}")
+            raise TimeoutError(f"rule store never saw {what}: {stored()}")
 
         # phase A: rule 1 over the rule socket (plus a junk line that must
         # be dropped), then metrics minutes 0..3 over the metric socket
@@ -415,7 +592,7 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
                         "aggregateFieldName": "m", "limitOperatorType": ">",
                         "limit": 0}),
         ])
-        await_store(lambda log: any(d.get("ruleId") == 1 for d in log), "rule 1")
+        await_store(lambda rules: 1 in rules, "rule 1")
         metric_server.send([mk(i) for i in range(4)])
         _await_rows(spark, name, lambda rows: any(r.rule_id == 1 for r in rows),
                     timeout_s=90)
@@ -428,11 +605,7 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
                         "limit": 999}),
             json.dumps({"ruleId": 1, "ruleState": "DELETE"}),
         ])
-        await_store(
-            lambda log: any(d.get("ruleId") == 7 for d in log)
-            and any(d.get("ruleId") == 1 and d.get("ruleState") == "DELETE" for d in log),
-            "rule 7 + delete 1",
-        )
+        await_store(lambda rules: 7 in rules and 1 not in rules, "rule 7 + delete 1")
 
         # phase B: minutes 4..7 + two watermark pushers
         metric_server.send([mk(4 + i) for i in range(4)] + [
@@ -457,8 +630,9 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
           for r in rows if r.rule_id == 1}
     r7 = {(r.window_start - base_s, r.window_end - base_s, r.agg_value)
           for r in rows if r.rule_id == 7 and FLUSH_TAG not in r.group_id}
-    # rule 1: phase A only — deleted before phase B ([2,4) flushes post-delete)
-    assert {(s, e) for s, e, _ in r1} == {(0, 120), (120, 240)}
+    # rule 1: phase A only — deleted before phase B, so [2,4), which
+    # closes after the delete, emits nothing
+    assert {(s, e) for s, e, _ in r1} == {(0, 120)}
     assert all(v == 2.0 for _s, _e, v in r1)
     # rule 7: phase B only
     assert {(s, e) for s, e, _ in r7} == {(240, 360), (360, 480)}

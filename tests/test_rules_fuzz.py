@@ -6,7 +6,8 @@ plan then reads the stored canonical documents back as typed data
 (streaming.live.rules_from_store). The two sides pinned here are that
 parse and the stored table: arbitrary byte soup must never crash the
 parser, the store must reject exactly the documents the parser drops,
-and the table read back must hold the SAME rules with the SAME fields.
+and the table read back must hold the current version of each accepted
+rule with the SAME fields.
 The fuzz domain covers the reference's wire vocabulary
 (Rule.java:12-24): the symbolic operator set (Rule.java:99-107),
 unknown-windowType coercion to global (CEPEngine.java:75-81),
@@ -34,7 +35,7 @@ from flink_cep_task_spark.rules import (
 )
 from flink_cep_task_spark.schemas import AGG_TYPES, LIMIT_OPS, RULE_STATES
 from flink_cep_task_spark.streaming.live import RuleFileStore, rules_from_store
-from tests.test_rules_wire import store_lines
+from tests.test_rules_wire import current_rules, store_lines
 
 _ascii = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=8
@@ -139,8 +140,9 @@ def _norm(r) -> tuple:
 @given(lines=st.lists(_line, min_size=1, max_size=10))
 def test_wire_parser_twins_agree_and_never_crash(spark, tmp_path_factory, lines):
     """The parser never crashes; the store rejects a line exactly when
-    the parser drops it; the stored table equals the parsed changelog
-    (re-sequenced in write order), before and after compaction."""
+    the parser drops it; the stored table equals the latest non-deleted
+    version per rule_id of the accepted documents (re-sequenced in write
+    order), and its compaction the compacted changelog."""
     parse_rule_lines(lines)
     store = RuleFileStore(str(tmp_path_factory.mktemp("fuzz") / "rules.json"))
     accepted = []
@@ -154,8 +156,50 @@ def test_wire_parser_twins_agree_and_never_crash(spark, tmp_path_factory, lines)
         assert parsed, line
         accepted.append(replace(parsed[0], seq=len(accepted) + 1))
     table = rules_from_store(spark, store.path)
-    assert sorted(map(_norm, table.collect())) == sorted(map(_norm, accepted))
+    assert sorted(map(_norm, table.collect())) == sorted(map(_norm, current_rules(accepted)))
     got = compact_rules(table).filter("rule_state = 'ACTIVE'").collect()
+    assert sorted(map(_norm, got)) == sorted(map(_norm, compact_rule_list(accepted)))
+
+
+_op_seq = st.lists(
+    st.one_of(
+        st.tuples(
+            st.just("upsert"),
+            st.integers(min_value=0, max_value=3),
+            st.sampled_from(sorted(RULE_STATES)),
+            st.integers(min_value=-2, max_value=2),
+        ),
+        st.tuples(st.just("delete"), st.integers(min_value=0, max_value=3)),
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(ops=_op_seq)
+def test_store_holds_compacted_changelog(spark, tmp_path_factory, ops):
+    """Any sequence of upserts (ACTIVE/PAUSE/DELETE) and deletes over a
+    few rule ids leaves the store's ACTIVE rules equal to the compaction
+    of the changelog written to it."""
+    store = RuleFileStore(str(tmp_path_factory.mktemp("ops") / "rules.json"))
+    accepted = []
+    for op in ops:
+        if op[0] == "delete":
+            store.delete(op[1])
+            accepted.append(Rule(rule_id=op[1], rule_state="DELETE"))
+        else:
+            _, rid, state, lim = op
+            doc = {"ruleId": rid, "ruleState": state, "windowType": "tumbling",
+                   "windowMinutes": 1 + rid, "limit": lim}
+            store.upsert(doc)
+            accepted.append(Rule.from_wire(doc))
+    accepted = [replace(r, seq=i + 1) for i, r in enumerate(accepted)]
+    got = rules_from_store(spark, store.path).filter("rule_state = 'ACTIVE'").collect()
     assert sorted(map(_norm, got)) == sorted(map(_norm, compact_rule_list(accepted)))
 
 

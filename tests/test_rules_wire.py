@@ -24,7 +24,7 @@ from flink_cep_task_spark.streaming.live import RuleFileStore, rules_from_store
 
 def store_lines(spark, dirpath, lines: list[str]):
     """Write each wire line through RuleFileStore.upsert, as the rule
-    socket bridge does, and read the stored changelog back as the live
+    socket bridge does, and read the stored rules back as the live
     engine's rule table. Returns (table, number of rejected lines)."""
     store = RuleFileStore(os.path.join(str(dirpath), f"rules_{uuid.uuid4().hex[:8]}.json"))
     rejected = 0
@@ -34,6 +34,15 @@ def store_lines(spark, dirpath, lines: list[str]):
         except ValueError:
             rejected += 1
     return rules_from_store(spark, store.path), rejected
+
+
+def current_rules(accepted: list[Rule]) -> list[Rule]:
+    """What a RuleFileStore holds after the accepted documents, in write
+    order: the latest version per rule_id, with deleted rules gone."""
+    latest: dict[int, Rule] = {}
+    for r in accepted:
+        latest[r.rule_id] = r
+    return [r for r in latest.values() if r.rule_state != "DELETE"]
 
 
 def test_python_parser_semantics():
@@ -80,12 +89,16 @@ def test_from_wire_defaults_and_delete():
 
 
 def test_store_table_agrees_with_parser(spark, tmp_path):
-    """The stored rule table holds exactly the rules the parser accepts,
-    field for field, in write order (the store's own seq)."""
+    """The stored rule table holds exactly the latest version per rule_id
+    of the rules the parser accepts, field for field, with the store's
+    own seq (write order)."""
     table, rejected = store_lines(spark, tmp_path, WIRE_RULE_LINES)
     assert rejected == 3  # bad JSON, missing windowMinutes, bad operator
     parsed = parse_rule_lines(WIRE_RULE_LINES)
-    expect = [replace(r, seq=i + 1) for i, r in enumerate(parsed)]
+    expect = current_rules([replace(r, seq=i + 1) for i, r in enumerate(parsed)])
+    # rule 21 was upserted twice: only its second version is stored
+    assert [(r.rule_id, r.limit) for r in expect if r.rule_id == 21] == [(21, "500.0000")]
+    expect.sort(key=lambda r: r.seq)
     got = [
         Rule(**{**row.asDict(), "grouping_keys": tuple(row.grouping_keys),
                 "limit": str(row.limit)})
