@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_cep_task_spark.oracle import _fmul, cep_oracle_sql
 from flink_cep_task_spark.plans.cep import evaluate_rules, evaluate_rules_on_events
-from flink_cep_task_spark.rules import Rule, parse_rule_lines
+from flink_cep_task_spark.rules import Rule, parse_rule_lines, rules_df
 from flink_cep_task_spark.sources.jsonline import metric_to_json, parse_metric_lines
 from flink_cep_task_spark.sources.tables import (
     events_to_metrics,
@@ -315,8 +315,8 @@ def q_live_streaming(
     from flink_cep_task_spark.schemas import METRIC_SCHEMA
     from flink_cep_task_spark.streaming.live import RuleFileStore, build_live_cep
     from flink_cep_task_spark.streaming.pipeline import (
-        await_stream,
         metrics_stream_from_parquet,
+        run_to_memory,
     )
 
     work, n_parts = _events_stream_workdir(
@@ -336,12 +336,7 @@ def q_live_streaming(
     out = build_live_cep(metrics, spark, store.path, watermark="1 minute")
     name = f"live_cep_{uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{name}"))
-            .trigger(availableNow=True).start()
-        )
-        await_stream(q, 600)
+        run_to_memory(out, name, "append", os.path.join(work, f"ckpt_{name}"), timeout_s=600)
     return spark.table(name).filter(~F.col("group_id").contains("zz_flush"))
 
 
@@ -463,67 +458,55 @@ TIMER_WINDOW_S = 86_400  # epoch-aligned daily tumbling windows
 
 
 def q_timer_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING parity query #4 — the TIMER-fired operator
-    (streaming/timers.timer_tumbling_windows_gs): per-key epoch-aligned
-    tumbling windows whose firing is driven by REGISTERED event-time
-    timers (register at window end on first event, fire-then-evict — the
-    principled analog of the reference's TriggerCenter.java:22-26 /
-    Window.java:58-63, swapping wall-clock for the watermark so windows
-    are never silently lost, SURVEY quirk Q4). Same replay scaffold as
-    the other streaming parity queries; the oracle is the plain batch
-    tumbling SQL, so the timer path is hash-checked end-to-end."""
+    """STREAMING parity query #4 — the live operator's window fold on its
+    own (streaming/live.live_cep_windows): epoch-aligned daily tumbling
+    windows per event type, each closed exactly once when the watermark
+    passes its end, through applyInPandasWithState event-time timeouts —
+    the principled analog of the reference's TriggerCenter.java:22-26 /
+    Window.java:58-63 timers, swapping wall-clock for the watermark so
+    windows are never silently lost (SURVEY quirk Q4). The replay fans
+    out to ONE static tumbling rule and returns the fold's UNGATED
+    partials (sum/count/min/max of `value`); the oracle is the plain
+    batch tumbling SQL, so the fold is hash-checked end-to-end. Rows
+    with a null `value` (and the zz_flush pusher, whose only measure is
+    "zzf") fold nothing; the pusher still advances the watermark."""
     import os
     import uuid
 
     from pyspark.sql import functions as F
 
     from flink_cep_task_spark.schemas import METRIC_SCHEMA
+    from flink_cep_task_spark.streaming.live import fanout_live, live_cep_windows
     from flink_cep_task_spark.streaming.pipeline import (
-        await_stream,
         metrics_stream_from_parquet,
+        run_to_memory,
     )
-    from flink_cep_task_spark.streaming.timers import timer_tumbling_windows_gs
 
     work, n_parts = _events_stream_workdir(spark, sf_dir, "timer_cep_")
     metrics = metrics_stream_from_parquet(
         spark, os.path.join(work, "src"), METRIC_SCHEMA,
         max_files_per_trigger=n_parts + 1,
     )
-    # Metric shape → the operator's (event_time, group_id, v) contract:
-    # cents pre-scaling keeps the fold exact and order-independent. Rows
-    # with a NULL 'value' measure are DROPPED (SQL aggregates skip NULLs;
-    # a coalesce-to-0 would drag agg_min and inflate agg_cnt) — except
-    # the watermark pusher, which carries no 'value' by design and must
-    # survive to advance the watermark; its zz_flush group never reaches
-    # the output. The oracle filters NULLs identically.
-    cents = (F.element_at("metrics", "value") * 100).cast("long")
-    keyed = (
-        metrics.select(
-            "event_time",
-            F.element_at("tags", "t_event_type").alias("group_id"),
-            cents.alias("v"),
-        )
-        .filter(F.col("v").isNotNull() | (F.col("group_id") == "zz_flush"))
-        .fillna({"v": 0})
+    rule = Rule(
+        rule_id=1, window_type="tumbling", window_minutes=TIMER_WINDOW_S // 60,
+        grouping_keys=("t_event_type",), agg_field="value",
     )
-    out = timer_tumbling_windows_gs(keyed, size_s=TIMER_WINDOW_S, watermark="1 minute")
+    fanned = fanout_live(metrics, rules_df(spark, [rule]), watermark="1 minute")
     name = f"timer_cep_{uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{name}"))
-            .trigger(availableNow=True).start()
+        run_to_memory(
+            live_cep_windows(fanned), name, "append",
+            os.path.join(work, f"ckpt_{name}"), timeout_s=600,
         )
-        await_stream(q, 600)
-    t = spark.table(name).filter(~F.col("group_id").contains("zz_flush"))
-    return t.select(
-        "group_id",
+    prefix_len = len(f"{rule.rule_id}_")
+    return spark.table(name).select(
+        F.expr(f"substr(group_id, {prefix_len + 1})").alias("group_id"),
         "window_start",
         "window_end",
-        (F.col("agg_sum").cast("double") / 100.0).alias("agg_sum"),
-        "agg_cnt",
-        (F.col("agg_min").cast("double") / 100.0).alias("agg_min"),
-        (F.col("agg_max").cast("double") / 100.0).alias("agg_max"),
+        F.col("__sum").alias("agg_sum"),
+        F.col("__cnt").alias("agg_cnt"),
+        F.col("__min").alias("agg_min"),
+        F.col("__max").alias("agg_max"),
     )
 
 
@@ -869,7 +852,7 @@ def q_dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from flink_cep_task_spark.streaming.ops import dedup_exact_stream
-    from flink_cep_task_spark.streaming.pipeline import await_stream
+    from flink_cep_task_spark.streaming.pipeline import run_to_memory
 
     work, n_parts = _docs_stream_workdir(spark, sf_dir)
     stream = (
@@ -881,12 +864,7 @@ def q_dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dedup_exact_stream(stream, watermark="52560000 minutes")
     name = f"dedup_stream_{uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{name}"))
-            .trigger(availableNow=True).start()
-        )
-        await_stream(q, 600)
+        run_to_memory(out, name, "append", os.path.join(work, f"ckpt_{name}"), timeout_s=600)
     return spark.table(name).select("k")
 
 
@@ -1378,19 +1356,11 @@ def _drain_fb(spark: SparkSession, work: str, out: DataFrame, tag: str) -> DataF
     import os
     import uuid
 
-    from flink_cep_task_spark.streaming.pipeline import await_stream
+    from flink_cep_task_spark.streaming.pipeline import run_to_memory
 
     name = f"{tag}_{uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 600)
+        run_to_memory(out, name, "append", os.path.join(work, f"ckpt_{name}"), timeout_s=600)
     return spark.table(name)
 
 

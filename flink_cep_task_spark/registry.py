@@ -28,10 +28,11 @@ DRIVER_GATE_CAP = 50
 # family, and each parked entry is pinned locally by tests/test_queries.py.
 #
 # Round 6 rotation (VERDICT r5 task #1): six flagship operators added since
-# round 3 — session windows (cep_session_sum), event-time timer firing
-# (cep_timer_windows), the 12-rule fan-out matrix (cep_many_rules), both
-# skew tools (salted_hot_user_join, skewsafe_user_distinct), and the
-# daily-crawl incremental dedup (dedup_incremental) — move INTO the
+# round 3 — session windows (cep_session_sum), watermark-fired windows
+# (cep_timer_windows, now the live operator's fold), the 12-rule fan-out
+# matrix (cep_many_rules), both skew tools (salted_hot_user_join,
+# skewsafe_user_distinct), and the daily-crawl incremental dedup
+# (dedup_incremental) — move INTO the
 # driver's 50-slot gate so the hard external signal covers the newest
 # operators. Six near-duplicate early entries rotate out (each family keeps
 # a gated representative, and every rotated-out query stays oracle-checked

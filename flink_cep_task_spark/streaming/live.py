@@ -191,6 +191,23 @@ def rules_from_store(spark: SparkSession, path: str) -> DataFrame:
     ])
 
 
+def fanout_live(metrics: DataFrame, rules: DataFrame, watermark: str) -> DataFrame:
+    """The live operator's input: Metric rows second-truncated, watermarked
+    on event_time, fanned out to `rules` (fanout_rules) and stamped with
+    `agg_cents`. Second-truncation comes before the watermark: the
+    engine's time domain is epoch seconds (see build_streaming_cep), so
+    session-merge distances in build_live_cep's native session branch
+    match the batch islands exactly."""
+    wm = metrics.withColumn(
+        "event_time", F.date_trunc("second", F.col("event_time"))
+    ).withWatermark("event_time", watermark)
+    return fanout_rules(wm, rules).withColumn(
+        # DECIMAL(18,2) × 100 → exact integer cents (see LIVE_STATE_SCHEMA)
+        "agg_cents",
+        (F.col("agg_input") * 100).cast("long"),
+    )
+
+
 def live_cep_windows(
     fanned: DataFrame,
     state_buckets: int = DEFAULT_STATE_BUCKETS,
@@ -202,10 +219,12 @@ def live_cep_windows(
     happen downstream against the current rule table (build_live_cep).
 
     Input must be a STREAMING DataFrame with a watermark on event_time and
-    the fanout_rules output columns plus `agg_cents`. Global-window rules
-    have no window end and never fire in this append-mode operator
-    (reference quirk Q5 — its AllWindowAssigner windows also never fire);
-    route them to run_live_cep_global's update-mode path instead.
+    the fanout_rules output columns plus `agg_cents` — fanout_live's
+    output. Rows with a null `agg_cents` (missing measure) fold nothing
+    but still advance the upstream watermark. Global-window rules have
+    no window end and never fire in this append-mode operator (reference
+    quirk Q5 — its AllWindowAssigner windows also never fire); route
+    them to run_live_cep_global's update-mode path instead.
 
     Keyed by (rule_id, hash_bucket(group_id)) with vectorized intra-bucket
     aggregation — see the module docstring's state-coarsening rationale.
@@ -353,6 +372,13 @@ def live_cep_windows(
                     [open_w[k][3] for k in keys],
                 )
             )
+            # GroupState carries ONE timeout per key, so the key's windows
+            # share it: it sits at the EARLIEST open window's end (strictly
+            # past the current watermark, as the API requires) and is
+            # re-armed here on every call. When it fires, every window the
+            # watermark has passed is emitted above and the timeout moves
+            # to the next earliest end — each window fires exactly once,
+            # when the watermark passes its end.
             min_end_ms = min(k[1] + k[2] for k in keys) * 1000
             state.setTimeoutTimestamp(max(min_end_ms, wm_ms + 1))
         elif state.exists:
@@ -427,17 +453,7 @@ def build_live_cep(
     update-mode path instead."""
     rules = rules_from_store(spark, rule_store_path)
     active = rules.filter(F.col("rule_state") == "ACTIVE")
-    # second-truncate before the watermark: the engine's time domain is
-    # epoch seconds (see build_streaming_cep) — session-merge distances
-    # in the native session branch must match the batch islands exactly
-    wm = metrics.withColumn(
-        "event_time", F.date_trunc("second", F.col("event_time"))
-    ).withWatermark("event_time", watermark)
-    fanned = fanout_rules(wm, active).withColumn(
-        # DECIMAL(18,2) × 100 → exact integer cents (see LIVE_STATE_SCHEMA)
-        "agg_cents",
-        (F.col("agg_input") * 100).cast("long"),
-    )
+    fanned = fanout_live(metrics, active, watermark)
     current = F.broadcast(active.select(
         "rule_id", "window_type", "window_minutes", "window_slide_minutes",
         "agg_type", "limit_op", "limit",

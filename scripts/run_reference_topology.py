@@ -86,7 +86,7 @@ def run_reference_check(spark) -> set[tuple[str, float]]:
     import uuid
 
     from flink_cep_task_spark.streaming.live import RuleFileStore, build_live_cep
-    from flink_cep_task_spark.streaming.pipeline import await_stream, metric_source
+    from flink_cep_task_spark.streaming.pipeline import metric_source, run_to_memory
 
     work = tempfile.mkdtemp(prefix="ref_topo_check_")
     store = RuleFileStore(os.path.join(work, "rules.json"))
@@ -112,13 +112,7 @@ def run_reference_check(spark) -> set[tuple[str, float]]:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True).start()
-        )
-        await_stream(q, 600)
+        run_to_memory(out, name, "append", os.path.join(work, "ckpt"), timeout_s=600)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return {

@@ -125,7 +125,6 @@ _SLOW_TESTS = {
     "test_queries.py::test_query_matches_oracle[daily_crawl_pipeline]",  # 12.0
     "test_daily_crawl.py::test_day2_decisions_flow_through_day1_admissions",  # 11.9
     "test_streaming.py::test_streaming_gap_sliding_rule_matches_batch",  # 11.2
-    "test_timers.py::test_groupstate_timer_restart_resume",  # 11.0
     "test_rules_fuzz.py::test_wire_parser_twins_agree_and_never_crash",  # 10.9
     "test_kafka_ingest.py::test_kafka_ingest_end_to_end_matches_batch",  # 10.4
     "test_live_rules.py::test_output_invariant_to_state_bucket_count",  # 10.2

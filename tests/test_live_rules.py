@@ -887,3 +887,200 @@ def test_gap_rule_survives_gap_only_micro_batch(spark, tmp_path):
                      r.agg_type, r.agg_value)
     assert sorted(map(key, got)) == sorted(map(key, expected))
     assert len(got) == 1  # exactly the in-window event's window fires
+
+
+class _FakeGroupState:
+    """Pure-python GroupState for replaying the live operator's update
+    function. Mirrors the API contract the operator relies on: a timeout
+    must lie strictly past the current watermark, and remove() drops the
+    timeout with the state."""
+
+    def __init__(self):
+        self.value = None
+        self.timeout = None
+        self.wm = 0
+        self.hasTimedOut = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, v):
+        self.value = v
+
+    def remove(self):
+        self.value = None
+        self.timeout = None
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms > self.wm, f"timeout {ms} not past the watermark {self.wm}"
+        self.timeout = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.wm
+
+
+def _capture_live_update(spark):
+    """live_cep_windows' `update` function, reached through a fake
+    DataFrame that records what applyInPandasWithState receives."""
+    from flink_cep_task_spark.streaming.live import live_cep_windows
+
+    captured = {}
+
+    class _CaptureDF:
+        def filter(self, *a):
+            return self
+
+        def withColumn(self, *a):
+            return self
+
+        def select(self, *a):
+            return self
+
+        def groupBy(self, *a):
+            return self
+
+        def applyInPandasWithState(self, fn, **kw):
+            captured.update(kw, fn=fn)
+
+    live_cep_windows(_CaptureDF())
+    assert captured["timeoutConf"] == "EventTimeTimeout"
+    return captured["fn"]
+
+
+def _oracle_window_starts(ts: int, wtype: str, size: int, slide: int) -> list[int]:
+    """Every window [start, start + size) that contains `ts`: tumbling
+    windows tile the size grid; sliding windows start on the slide grid
+    and may leave gaps between them when slide > size."""
+    if wtype == "tumbling":
+        return [ts - ts % size]
+    return [
+        k * slide
+        for k in range((ts - size) // slide, ts // slide + 1)
+        if k * slide <= ts < k * slide + size
+    ]
+
+
+def test_live_update_model_random(spark):
+    """Model test of the live operator's update function: Spark's
+    invocation protocol is replayed against a fake state, and the fired
+    partials are compared with a plain-Python window oracle.
+
+    Per micro-batch, every (rule, bucket) key with rows gets one data call
+    (hasTimedOut=False); then every key without rows whose timeout lies
+    strictly below the watermark gets a timed-out call with its timeout
+    cleared. The watermark a batch sees is max(event time of EARLIER
+    batches) minus the delay, and never moves back. A trailing no-data
+    batch runs after the watermark pusher. Trials vary the window type
+    (tumbling, sliding, gap sliding with slide > size), null measures,
+    near-epoch timestamps (negative sliding starts), late rows and the
+    watermark delay. Every non-late row lands in every window that
+    contains it, each window fires exactly once, no timeout is ever armed
+    at or behind the watermark, and no state is left after the flush."""
+    import random
+
+    import pandas as pd
+
+    update = _capture_live_update(spark)
+    rng = random.Random(20260417)
+    n_buckets = 3
+    n_fired = 0
+    for trial in range(150):
+        delay_ms = rng.choice([0, 60_000, 120_000])
+        base = rng.choice([0, 1_700_000_000])  # near-epoch or present day
+        rules = {}
+        for rule_id in range(1, rng.randint(1, 3) + 1):
+            wtype = rng.choice(["tumbling", "sliding", "gap"])
+            size_m = rng.randint(1, 4)
+            slide_m = {
+                "tumbling": None,
+                "sliding": rng.randint(1, size_m),
+                "gap": size_m + rng.randint(1, 3),
+            }[wtype]
+            rules[rule_id] = ("tumbling" if wtype == "tumbling" else "sliding",
+                              size_m, slide_m)
+        rows = [
+            (base + rng.randint(0, 900), rng.choice(list(rules)),
+             rng.choice(["g0", "g1", "g2", "g3"]),
+             None if rng.random() < 0.15 else rng.randint(-500, 5000))
+            for _ in range(rng.randint(1, 60))
+        ]
+        n_batches = rng.randint(1, 4)
+        batches = [rows[i::n_batches] for i in range(n_batches)]
+        # late rows: arrive after later event times moved the watermark on
+        batches.append([
+            (base + rng.randint(0, 300), rng.choice(list(rules)), "g0",
+             rng.randint(0, 99))
+            for _ in range(rng.randint(0, 3))
+        ])
+        # watermark pusher: a null measure, so it folds nothing
+        batches.append([(base + 100_000, 1, "zz", None)])
+
+        states: dict[tuple, _FakeGroupState] = {}
+        fired: list[tuple] = []
+        oracle: dict[tuple, list] = {}
+        wm = 0
+        for batch in batches + [[]]:  # trailing no-data batch
+            by_key: dict[tuple, list] = {}
+            for row in batch:
+                key = (row[1], sum(map(ord, row[2])) % n_buckets)
+                by_key.setdefault(key, []).append(row)
+            for key, key_rows in by_key.items():
+                wtype, size_m, slide_m = rules[key[0]]
+                pdf = pd.DataFrame({
+                    "rule_id": key[0],
+                    "bucket": key[1],
+                    "group_id": [f"{r[1]}_{r[2]}" for r in key_rows],
+                    "event_time": pd.to_datetime([r[0] for r in key_rows], unit="s"),
+                    # Arrow hands a nullable LONG over as float64 with NaN
+                    "agg_cents": pd.Series(
+                        [r[3] for r in key_rows],
+                        dtype="float64" if any(r[3] is None for r in key_rows) else "int64",
+                    ),
+                    "window_type": wtype,
+                    "window_minutes": size_m,
+                    "window_slide_minutes": slide_m,
+                })
+                st = states.setdefault(key, _FakeGroupState())
+                st.wm, st.hasTimedOut = wm, False
+                for out in update(key, iter([pdf]), st):
+                    fired.extend(out.itertuples(index=False, name=None))
+                size, slide = size_m * 60, (slide_m or size_m) * 60
+                for ts, rule_id, g, cents in key_rows:
+                    if cents is None:
+                        continue
+                    for ws in _oracle_window_starts(ts, wtype, size, slide):
+                        if (ws + size) * 1000 <= wm:
+                            continue  # late: this window already fired
+                        agg = oracle.setdefault(
+                            (rule_id, f"{rule_id}_{g}", ws, ws + size),
+                            [0, 0, cents, cents],
+                        )
+                        agg[0] += cents
+                        agg[1] += 1
+                        agg[2] = min(agg[2], cents)
+                        agg[3] = max(agg[3], cents)
+            for key, st in states.items():
+                if key in by_key or st.timeout is None or st.timeout >= wm:
+                    continue
+                st.wm, st.hasTimedOut, st.timeout = wm, True, None
+                for out in update(key, iter([]), st):
+                    fired.extend(out.itertuples(index=False, name=None))
+            if batch:
+                wm = max(wm, max(r[0] for r in batch) * 1000 - delay_ms)
+
+        got = {(r, g, ws, we): (s, c, mn, mx) for r, g, ws, we, s, c, mn, mx in fired}
+        assert len(got) == len(fired), f"trial {trial}: a window fired twice"
+        expected = {
+            k: (s / 100.0, c, mn / 100.0, mx / 100.0)
+            for k, (s, c, mn, mx) in oracle.items()
+        }
+        assert got == expected, f"trial {trial}: {sorted(got)} != {sorted(expected)}"
+        for key, st in states.items():
+            assert not st.exists, f"trial {trial}: state left for {key}: {st.value}"
+        n_fired += len(fired)
+    assert n_fired > 1000  # the trials exercise the operator

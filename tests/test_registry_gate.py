@@ -29,7 +29,7 @@ MUST_BE_GATED = {
     # round-6 promotions (VERDICT r5 task #1): the flagship operators added
     # since round 3 must hold driver-gate slots from now on.
     "cep_session_sum",           # session windows (reference extension)
-    "cep_timer_windows",         # event-time timer register/fire/evict
+    "cep_timer_windows",         # live fold: event-time timeout fire/evict
     "cep_many_rules",            # 12-rule broadcast fan-out matrix
     "salted_hot_user_join",      # explicit salting leg AQE can't see
     "skewsafe_user_distinct",    # two-phase skew-safe distinct
