@@ -29,8 +29,9 @@ thread does NOT inherit the submitting thread's JVM local properties, so
 jobs submitted from the pool would detach from the caller's job group /
 description — a streaming query's foreachBatch writes could then outlive
 query.stop(), and UI/event-log attribution would lose the label. The
-wrapper copies the properties in and cleans them up; nothing below
-changes session conf from a thread."""
+wrapper only copies the properties in; it never restores or clears them,
+so they are discarded with the short-lived pool thread (the pool ends at
+the barrier). Nothing below changes session conf from a thread."""
 
 from __future__ import annotations
 

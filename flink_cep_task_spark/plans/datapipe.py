@@ -603,11 +603,12 @@ def _daily_cycle(
     # equi-join of 32-byte md5 keys (the corpus side is every stored
     # doc's key: far past any broadcast gate at scale, and uniform-
     # hashed, so the shuffle is skew-free)
+    prebuilt = lambda *keys: all(ctx.get(k) is not None for k in keys)
     corp_keys = ctx.get("exact_keys")
-    if corp_keys is None or "near_banded" not in ctx or "near_sets" not in ctx:
-        store = spark.read.parquet(sig_store_path).filter(sig_corpus_pred)
-    else:
+    if prebuilt("exact_keys", "near_banded", "near_sets"):
         store = None  # every signature-store consumer below is prebuilt
+    else:
+        store = spark.read.parquet(sig_store_path).filter(sig_corpus_pred)
     if corp_keys is None:
         corp_keys = store.select("k").distinct().withColumn("__hit", F.lit(1))
     exact = (
@@ -621,7 +622,7 @@ def _daily_cycle(
     ).select(
         "doc_id", F.col("status").alias("near_status"), "match_id", "jaccard"
     )
-    if "sub_ok" in ctx and "sub_counts" in ctx:
+    if prebuilt("sub_ok", "sub_counts"):
         fp_store = None  # both fingerprint-store consumers are prebuilt
     else:
         fp_store = spark.read.parquet(fp_store_path).filter(

@@ -52,23 +52,27 @@ already fired (or would have fired empty), and merging a late row into
 it would resurrect it and double-emit in append mode.
 
 STATE COARSENING (the load-bearing scale decision): the operator is keyed
-by (rule_id, hash_bucket(group_id)), NOT by raw (rule_id, group_id) — the
+by hash_bucket(group_id) alone, NOT by raw group_id and NOT per rule — the
 reference's keyBy (CEPTaskRunner.java:46) maps to the SHUFFLE distribution
 either way, but PySpark's applyInPandasWithState pays a fixed cost per
 KEY per micro-batch: measured on the live_rules benchmark at ~12 ms of
 task time per key, ~4 ms of it inside `update` (pandas fixed cost), the
 rest the Arrow exchange + state round trip. Keying by raw group id means
 O(distinct groups) × that cost per batch — unusable at millions of
-groups. Each bucket key instead carries the state of MANY groups as
-parallel arrays, and the update function aggregates all of a bucket's
-rows in one vectorized pandas/numpy pass, so per-batch cost is
-O(buckets) × the per-key cost + O(rows) vectorized. Buckets are sized ∝
-total cores (64 default — far above local parallelism); results are
-bucket-independent, only the shuffle/state layout changes.
+groups — and keying by (rule, bucket) O(rules × buckets). Each bucket key
+instead carries the open windows of MANY groups of EVERY rule as parallel
+arrays, and `update` assigns, merges and fires all of a bucket's rows in
+one columnar numpy pass (no Python loop over rows or windows), so
+per-batch cost is O(buckets) × the per-key cost + O(rows) vectorized,
+whatever the rule count — like the batch plan. A group id begins with
+its rule id, so the hash spreads every rule's groups over all buckets.
+Buckets are sized ∝ total cores (64 default — far above local
+parallelism); results are bucket-independent, only the shuffle/state
+layout changes.
 
-Scale: state is hash-partitioned by (rule_id, bucket); per-group state is
-a handful of ints per open window; the rule table is KBs and broadcast
-(once to the fan-out, once to the gate).
+Scale: state is hash-partitioned by bucket; per-group state is a handful
+of ints per open window; the rule table is KBs and broadcast (once to the
+fan-out, once to the gate).
 No driver-side loops.
 """
 
@@ -93,20 +97,23 @@ from flink_cep_task_spark.rules import WIRE_NAMES, Rule
 from flink_cep_task_spark.schemas import RULE_SCHEMA
 
 SECONDS_PER_MINUTE = 60
-DEFAULT_STATE_BUCKETS = 64  # per rule; raise ∝ cluster cores at scale
+DEFAULT_STATE_BUCKETS = 64  # shared by all rules; raise ∝ cluster cores at scale
 
 # partials are integer CENTS (measures are DECIMAL(18,2) engine-wide):
 # integer accumulation is exact and order-independent, and a closed
 # window's partials leave the operator as cents / 100.0 — bit-identical to
 # the batch engine's decimal-sum-cast-double, so live streaming results
 # hash-match the same DuckDB oracle as the batch plans.
-# One state row per (rule, bucket): entry i of the parallel arrays is one
-# open (group, window) with its partials (see "state coarsening" above).
+# One state row per hash bucket, shared by every rule: entry i of the
+# parallel arrays is one open (rule, group, window) with its partials
+# (see "state coarsening" above).
 LIVE_STATE_SCHEMA = (
-    "gids ARRAY<STRING>, wstarts ARRAY<LONG>, wsizes ARRAY<LONG>, "
+    "rule_ids ARRAY<INT>, gids ARRAY<STRING>, "
+    "wstarts ARRAY<LONG>, wsizes ARRAY<LONG>, "
     "sums ARRAY<LONG>, cnts ARRAY<LONG>, "
     "mins ARRAY<LONG>, maxs ARRAY<LONG>"
 )
+_STATE_DTYPES = (np.int64, object) + (np.int64,) * 6
 # what the operator emits per closed window, in measure units
 _PARTIALS_SCHEMA = (
     "rule_id INT, group_id STRING, window_start LONG, window_end LONG, "
@@ -208,6 +215,46 @@ def fanout_live(metrics: DataFrame, rules: DataFrame, watermark: str) -> DataFra
     )
 
 
+def _assign_windows(pdf: pd.DataFrame, wm_s: int) -> tuple:
+    """One frame of live_cep_windows' input → one partial per (row,
+    window containing the row), in LIVE_STATE_SCHEMA order. Rows of
+    different rules carry different window specs; all are assigned in one
+    vectorized pass, as operators.windows.assign_windows does in the JVM.
+    Windows the watermark has already closed are left out."""
+    # nullable Int64 (NOT a float64 round-trip, which would lose exactness
+    # above 2^53 — DECIMAL(18,2) cents reach ~2^57): missing measures
+    # (null cents) carry SQL null semantics (Q1 fix) and fold nothing.
+    cents = pdf["agg_cents"].astype("Int64")
+    ok = cents.notna().to_numpy()
+    val = cents[ok].to_numpy(dtype="int64")
+    ts = pdf["event_time"].astype("int64").to_numpy()[ok] // 1_000_000_000
+    size = pdf["window_minutes"].to_numpy(dtype="int64")[ok] * SECONDS_PER_MINUTE
+    # a tumbling rule tiles the size grid, whatever slide it carries
+    slide_m = pdf["window_slide_minutes"].to_numpy(dtype="float64")[ok]
+    slide = np.where(
+        (pdf["window_type"].to_numpy()[ok] == "tumbling") | np.isnan(slide_m),
+        size, slide_m * SECONDS_PER_MINUTE,
+    ).astype(np.int64)
+    # the windows holding ts start on the slide grid in (ts - size, ts]:
+    # near epoch 0 the first may start at a NEGATIVE second, and a row in
+    # a gap between GAP windows (slide > size) gets none
+    first = ((ts - size) // slide + 1) * slide
+    n = ts // slide - (ts - size) // slide
+    row = np.repeat(np.arange(len(ts)), n)
+    start = first[row] + (np.arange(len(row)) - np.repeat(np.cumsum(n) - n, n)) * slide[row]
+    # late data: a window whose end the watermark has passed already
+    # fired; merging into it would resurrect it and double-emit (see
+    # module doc)
+    on_time = start + size[row] > wm_s
+    row, start = row[on_time], start[on_time]
+    v = val[row]
+    return (
+        pdf["rule_id"].to_numpy(dtype="int64")[ok][row],
+        pdf["group_id"].to_numpy(dtype=object)[ok][row],
+        start, size[row], v, np.ones(len(row), dtype=np.int64), v, v,
+    )
+
+
 def live_cep_windows(
     fanned: DataFrame,
     state_buckets: int = DEFAULT_STATE_BUCKETS,
@@ -226,121 +273,43 @@ def live_cep_windows(
     quirk Q5 — its AllWindowAssigner windows also never fire); route
     them to run_live_cep_global's update-mode path instead.
 
-    Keyed by (rule_id, hash_bucket(group_id)) with vectorized intra-bucket
-    aggregation — see the module docstring's state-coarsening rationale.
-    The window spec is read from the batch's rows; the state holds no
-    rule config.
+    Keyed by hash_bucket(group_id) alone: one key holds the open windows
+    of every rule whose groups hash to it, and folds them in one columnar
+    numpy pass — see the module docstring's state-coarsening rationale.
+    Each row carries its rule's window spec; the state holds no rule
+    config.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        rule_id = int(key[0])
         wm_ms = state.getCurrentWatermarkMs()
         wm_s = wm_ms // 1000
-
-        # open_w: (group_id, window_start_s, window_size_s) -> [sum, cnt, min, max]
-        open_w = {}
-        if state.exists:
-            gids, wstarts, wsizes, sums, cnts, mins, maxs = state.get
-            open_w = {
-                (gids[i], int(wstarts[i]), int(wsizes[i])): [
-                    int(sums[i]), int(cnts[i]), int(mins[i]), int(maxs[i])
-                ]
-                for i in range(len(gids))
-            }
-
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                # the window spec rides on every row, uniform within the
-                # key: one rule, one rule-table read per micro-batch
-                last = pdf.iloc[-1]
-                wtype = str(last["window_type"])
-                size_s = int(last["window_minutes"]) * SECONDS_PER_MINUTE
-                slide_m = last["window_slide_minutes"]
-                slide_s = (
-                    int(slide_m) * SECONDS_PER_MINUTE if pd.notna(slide_m) else size_s
-                )
-                # nullable Int64 (NOT a float64 round-trip, which would lose
-                # exactness above 2^53 — DECIMAL(18,2) cents reach ~2^57):
-                # missing measures (null cents) carry SQL null semantics
-                # (Q1 fix) and aggregate nothing.
-                cents = pdf["agg_cents"].astype("Int64")
-                ok = cents.notna().to_numpy()
-                if not ok.any():
-                    continue
-                ts = (pdf["event_time"].astype("int64").to_numpy() // 1_000_000_000)[ok]
-                vals = cents[ok].to_numpy(dtype="int64")
-                gid_codes, gid_uniq = pd.factorize(pdf["group_id"].to_numpy()[ok])
-                gid_codes = gid_codes.astype(np.int64)
-                # vectorized window assignment across ALL groups in the
-                # bucket (a python per-row or per-group loop here was the
-                # pipeline's hotspot)
-                if wtype == "tumbling":
-                    g_all, v_all = gid_codes, vals
-                    s_all = (ts // size_s) * size_s
-                else:
-                    first = ((ts - size_s) // slide_s + 1) * slide_s
-                    lastw = (ts // slide_s) * slide_s
-                    gs, ss, vs = [], [], []
-                    n_cover = (size_s + slide_s - 1) // slide_s + 1
-                    for j in range(n_cover):
-                        s = first + j * slide_s
-                        m = s <= lastw
-                        if m.any():
-                            gs.append(gid_codes[m])
-                            ss.append(s[m])
-                            vs.append(vals[m])
-                    if not gs:
-                        # GAP windows (slide > size): every event in this
-                        # batch slice fell between windows — nothing to
-                        # fold. Guard required: a one-data-batch replay
-                        # always has some in-window event, but a multi-
-                        # micro-batch cadence can hand a bucket a
-                        # gap-only slice (np.concatenate([]) raises).
-                        continue
-                    g_all = np.concatenate(gs)
-                    s_all = np.concatenate(ss)
-                    v_all = np.concatenate(vs)
-                # one fold per (group, window). Offset packing (NOT a plain
-                # shift-or): a sliding window covering an event near epoch 0
-                # legitimately starts at a NEGATIVE second (first = ((ts -
-                # size) // slide + 1) * slide), which would corrupt an OR
-                # pack. s + 2^34 maps every start in (-2^34, 2^34) — ±544
-                # years — to a non-negative < 2^35; group codes stay < 2^28
-                # per bucket-batch, so the product fits int64 exactly.
-                kk = g_all * np.int64(1 << 35) + (s_all.astype(np.int64) + np.int64(1 << 34))
-                uniq, inv = np.unique(kk, return_inverse=True)
-                sums_a = np.zeros(len(uniq), dtype=np.int64)
-                np.add.at(sums_a, inv, v_all)
-                cnts_a = np.bincount(inv, minlength=len(uniq))
-                mins_a = np.full(len(uniq), np.iinfo(np.int64).max, dtype=np.int64)
-                np.minimum.at(mins_a, inv, v_all)
-                maxs_a = np.full(len(uniq), np.iinfo(np.int64).min, dtype=np.int64)
-                np.maximum.at(maxs_a, inv, v_all)
-                u_gid = (uniq >> 35).tolist()
-                u_start = ((uniq & ((1 << 35) - 1)) - (1 << 34)).tolist()
-                for i in range(len(uniq)):
-                    if int(u_start[i]) + size_s <= wm_s:
-                        # late data: this window's end precedes the current
-                        # watermark — it already fired; merging would
-                        # resurrect it and double-emit (see module doc)
-                        continue
-                    k = (gid_uniq[u_gid[i]], int(u_start[i]), size_s)
-                    w = open_w.get(k)
-                    if w is None:
-                        open_w[k] = [
-                            int(sums_a[i]), int(cnts_a[i]),
-                            int(mins_a[i]), int(maxs_a[i]),
-                        ]
-                    else:
-                        w[0] += int(sums_a[i])
-                        w[1] += int(cnts_a[i])
-                        w[2] = min(w[2], int(mins_a[i]))
-                        w[3] = max(w[3], int(maxs_a[i]))
+        # the key's open windows, then every frame's new partials; a
+        # key's rows may arrive in several frames, all folded before any
+        # window fires
+        parts = [
+            tuple(np.asarray(a, dtype=d) for a, d in zip(state.get, _STATE_DTYPES))
+        ] if state.exists else []
+        parts += [_assign_windows(pdf, wm_s) for pdf in pdfs]
+        rule, gid, start, size, sums, cnts, mins, maxs = (
+            np.concatenate(col) for col in zip(*parts)
+        )
+        # one entry per (group, window): sort on (group, size, start) and
+        # reduce each run. A group id begins with its rule id
+        # (fanout_rules), so the group code fixes the rule as well.
+        code = pd.factorize(gid)[0]
+        order = np.lexsort((start, size, code))
+        code, start, size = code[order], start[order], size[order]
+        head = np.ones(len(order), dtype=bool)
+        head[1:] = (np.diff(code) != 0) | (np.diff(size) != 0) | (np.diff(start) != 0)
+        at = np.flatnonzero(head)
+        rule, gid, start, size = rule[order][at], gid[order][at], start[at], size[at]
+        sums = np.add.reduceat(sums[order], at)
+        cnts = np.add.reduceat(cnts[order], at)
+        mins = np.minimum.reduceat(mins[order], at)
+        maxs = np.maximum.reduceat(maxs[order], at)
 
         # close ONLY when the WATERMARK passes the window end. A data-driven
         # close (fire when a later event of the group arrives — the
@@ -348,51 +317,34 @@ def live_cep_windows(
         # out-of-order event in a later micro-batch would resurrect the
         # already-emitted window and emit it again with partial contents.
         # Watermark close is safe by construction — once wm ≥ end, any
-        # further event for that window is below the watermark and dropped
-        # upstream.
-        fired = []
-        for k in list(open_w):
-            gid, start_s, size_s = k
-            end_s = start_s + size_s
-            if end_s <= wm_s:
-                s, c, mn, mx = open_w.pop(k)
-                fired.append((rule_id, gid, start_s, end_s,
-                              s / 100.0, c, mn / 100.0, mx / 100.0))
-
-        if open_w:
-            keys = sorted(open_w)
-            state.update(
-                (
-                    [k[0] for k in keys],
-                    [k[1] for k in keys],
-                    [k[2] for k in keys],
-                    [open_w[k][0] for k in keys],
-                    [open_w[k][1] for k in keys],
-                    [open_w[k][2] for k in keys],
-                    [open_w[k][3] for k in keys],
-                )
-            )
+        # further row for that window is discarded as late above.
+        end = start + size
+        fire = end <= wm_s
+        if not fire.all():
+            # state is pickled to the JVM: plain python lists
+            state.update(tuple(
+                a[~fire].tolist()
+                for a in (rule, gid, start, size, sums, cnts, mins, maxs)
+            ))
             # GroupState carries ONE timeout per key, so the key's windows
             # share it: it sits at the EARLIEST open window's end (strictly
             # past the current watermark, as the API requires) and is
             # re-armed here on every call. When it fires, every window the
-            # watermark has passed is emitted above and the timeout moves
+            # watermark has passed is emitted below and the timeout moves
             # to the next earliest end — each window fires exactly once,
             # when the watermark passes its end.
-            min_end_ms = min(k[1] + k[2] for k in keys) * 1000
-            state.setTimeoutTimestamp(max(min_end_ms, wm_ms + 1))
+            state.setTimeoutTimestamp(max(int(end[~fire].min()) * 1000, wm_ms + 1))
         elif state.exists:
             # nothing in flight: drop the state row entirely so deleted
             # rules / retired groups don't accumulate in the state store
             state.remove()
-        if fired:
-            yield pd.DataFrame(
-                fired,
-                columns=[
-                    "rule_id", "group_id", "window_start", "window_end",
-                    "__sum", "__cnt", "__min", "__max",
-                ],
-            )
+        if fire.any():
+            yield pd.DataFrame({
+                "rule_id": rule[fire], "group_id": gid[fire],
+                "window_start": start[fire], "window_end": end[fire],
+                "__sum": sums[fire] / 100.0, "__cnt": cnts[fire],
+                "__min": mins[fire] / 100.0, "__max": maxs[fire] / 100.0,
+            })
 
     windowed = fanned.filter(F.col("window_type") != "global").withColumn(
         "bucket", F.pmod(F.xxhash64("group_id"), F.lit(state_buckets))
@@ -404,7 +356,7 @@ def live_cep_windows(
         "rule_id", "bucket", "group_id", "event_time", "agg_cents",
         "window_type", "window_minutes", "window_slide_minutes",
     )
-    return slim.groupBy("rule_id", "bucket").applyInPandasWithState(
+    return slim.groupBy("bucket").applyInPandasWithState(
         update,
         outputStructType=_PARTIALS_SCHEMA,
         stateStructType=LIVE_STATE_SCHEMA,
@@ -434,11 +386,13 @@ def build_live_cep(
     delete, pause or resize emits nothing, and one closed after a
     re-limit or re-aggregate is gated with the new config.
 
-    The operator's state layout (LIVE_STATE_SCHEMA: no agg_type/limit_op/
-    lim) and the session branches' aggregation buffer (no latest-config
-    pick) differ from those of earlier versions, so a live query must
-    start from a fresh checkpointLocation after an upgrade; state written
-    with the old layout cannot be resumed.
+    The operator's key (the hash bucket alone, no rule id) and state
+    layout (LIVE_STATE_SCHEMA: every rule's windows in one row per
+    bucket, with a rule_ids column; no agg_type/limit_op/lim) and the
+    session branches' aggregation buffer (no latest-config pick) differ
+    from those of earlier versions, so a live query must start from a
+    fresh checkpointLocation after an upgrade; state written with an
+    older key or layout cannot be resumed.
 
     Covers tumbling/sliding rules DYNAMICALLY (window size is a column —
     add/resize mid-run, next batch applies it) and session rules via

@@ -285,3 +285,49 @@ def test_daily_cycle_probe_ctx_is_result_identical_and_leaf_planned(spark):
     assert not store_scans, store_scans
     assert "ExistingRDD" in plan
     release_caches()
+
+
+def test_daily_cycle_probe_ctx_none_frames_fall_back_to_the_store(spark):
+    """A probe_ctx frame that is present but None means "not prebuilt",
+    exactly like a missing one: the probe must read the store for every
+    consumer whose frame is None. Only exact_keys is supplied here; the
+    near and substring frames are None, and the result equals the plain
+    in-plan probe."""
+    from flink_cep_task_spark.operators.cache import release_caches
+    from flink_cep_task_spark.operators.text import nb_model_from_counts
+    from flink_cep_task_spark.plans.datapipe import (
+        _daily_cycle,
+        _rolling_fp_store,
+        _rolling_nb_count_store,
+        _rolling_sig_store,
+    )
+    from flink_cep_task_spark.sources.tables import widen_small_scan
+
+    release_caches()
+    day1 = D.INCREMENTAL_INCOMING_SOURCE
+    sig_path = _rolling_sig_store(spark, SF_DIR)
+    fp_path = _rolling_fp_store(spark, SF_DIR)
+    nb_path = _rolling_nb_count_store(spark, SF_DIR)
+    model = nb_model_from_counts(
+        spark.read.parquet(nb_path).filter(F.col("batch") == "base")
+    )
+    pred = ~F.col("source").isin(*D.ROLLING_DAYS)
+    docs = widen_small_scan(load_table(spark, SF_DIR, "documents"))
+    exact_keys = (
+        spark.read.parquet(sig_path).filter(pred)
+        .select("k").distinct().withColumn("__hit", F.lit(1))
+    )
+    ctx = {
+        "exact_keys": exact_keys, "near_banded": None, "near_sets": None,
+        "sub_ok": None, "sub_counts": None,
+    }
+
+    plain = _daily_cycle(spark, docs, day1, sig_path, pred, model, fp_path)
+    with_ctx = _daily_cycle(
+        spark, docs, day1, sig_path, pred, model, fp_path, probe_ctx=ctx
+    )
+    rows = lambda df: sorted(tuple(str(x) for x in r) for r in df.collect())
+    got, exp = rows(with_ctx), rows(plain)
+    assert got and got == exp
+    release_caches()
+

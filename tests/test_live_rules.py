@@ -670,6 +670,36 @@ def test_output_invariant_to_state_bucket_count(spark, tmp_path):
     assert len(results[0]) > 0
 
 
+def test_live_state_holds_one_row_per_bucket(spark, tmp_path):
+    """The live operator is keyed by hash bucket alone: however many rules
+    are active, the state store holds at most one row per bucket (keyed
+    by (rule, bucket), 6 rules over 4 buckets would hold up to 24)."""
+    events = [
+        {"eventTime": 1_700_000_000_000 + i * 15_000, "t_g": f"g{i % 40}", "m": i % 9}
+        for i in range(400)
+    ]
+    src = _write_chunks(tmp_path, events)
+    store = RuleFileStore(str(tmp_path / "rules_one_row.json"))
+    for rule_id in range(1, 7):
+        wire = R1_WIRE if rule_id % 2 else R2_WIRE
+        store.upsert({**wire, "ruleId": rule_id, "windowMinutes": 5 * rule_id,
+                      "limit": -1})
+    metrics = metrics_stream_from_text(spark, src, max_files_per_trigger=1)
+    out = build_live_cep(metrics, spark, store.path, watermark="1 minute",
+                         state_buckets=4)
+    name = f"one_row_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_one_row"))
+        .trigger(availableNow=True).start()
+    )
+    await_stream(q, 180)
+    state_rows = [p.stateOperators[0].numRowsTotal for p in q.recentProgress]
+    assert state_rows and max(state_rows) > 0, state_rows
+    assert all(n <= 4 for n in state_rows), state_rows
+    assert spark.table(name).count() > 0
+
+
 def test_live_engine_handles_near_epoch_timestamps(spark, tmp_path):
     """Sliding windows covering events near epoch 0 start at NEGATIVE
     seconds (the reference's own unit tests use ts=1ms,
@@ -942,12 +972,14 @@ def _capture_live_update(spark):
             return self
 
         def groupBy(self, *a):
+            captured["groupBy"] = a
             return self
 
         def applyInPandasWithState(self, fn, **kw):
             captured.update(kw, fn=fn)
 
     live_cep_windows(_CaptureDF())
+    assert captured["groupBy"] == ("bucket",)
     assert captured["timeoutConf"] == "EventTimeTimeout"
     return captured["fn"]
 
@@ -970,17 +1002,23 @@ def test_live_update_model_random(spark):
     invocation protocol is replayed against a fake state, and the fired
     partials are compared with a plain-Python window oracle.
 
-    Per micro-batch, every (rule, bucket) key with rows gets one data call
-    (hasTimedOut=False); then every key without rows whose timeout lies
-    strictly below the watermark gets a timed-out call with its timeout
-    cleared. The watermark a batch sees is max(event time of EARLIER
-    batches) minus the delay, and never moves back. A trailing no-data
-    batch runs after the watermark pusher. Trials vary the window type
-    (tumbling, sliding, gap sliding with slide > size), null measures,
-    near-epoch timestamps (negative sliding starts), late rows and the
-    watermark delay. Every non-late row lands in every window that
-    contains it, each window fires exactly once, no timeout is ever armed
-    at or behind the watermark, and no state is left after the flush."""
+    The operator is keyed by hash bucket alone, so one key's frame mixes
+    the rows of several rules, each row carrying its own rule's window
+    spec. Per micro-batch, every bucket with rows gets one data call
+    (hasTimedOut=False), its rows split over one or two frames; then
+    every bucket without rows whose timeout lies strictly below the
+    watermark gets a timed-out call with its timeout cleared. The
+    watermark a batch sees is max(event time of EARLIER batches) minus
+    the delay, and never moves back. A trailing no-data batch runs after
+    the watermark pusher. Trials vary the window type (tumbling, sliding,
+    gap sliding with slide > size), null measures, near-epoch timestamps
+    (negative sliding starts), late rows, the watermark delay and a
+    mid-trial resize of one rule, after which a group holds windows of
+    two sizes in one key's state. Every non-late row lands in every
+    window that contains it, each window fires exactly once, no timeout
+    is ever armed at or behind the watermark, no window fires later than
+    the first batch whose watermark passes its end, and no state is left
+    after the flush."""
     import random
 
     import pandas as pd
@@ -988,26 +1026,46 @@ def test_live_update_model_random(spark):
     update = _capture_live_update(spark)
     rng = random.Random(20260417)
     n_buckets = 3
-    n_fired = 0
-    for trial in range(150):
+
+    def spec():
+        wtype = rng.choice(["tumbling", "sliding", "gap"])
+        size_m = rng.randint(1, 4)
+        slide_m = {
+            "tumbling": None,
+            "sliding": rng.randint(1, size_m),
+            "gap": size_m + rng.randint(1, 3),
+        }[wtype]
+        return ("tumbling" if wtype == "tumbling" else "sliding", size_m, slide_m)
+
+    _bucket = lambda row: sum(map(ord, f"{row[1]}_{row[2]}")) % n_buckets
+
+    def frame(rows):
+        # one row per (ts, rule, group, cents, spec); Arrow hands a
+        # nullable LONG/INT column over as float64 with NaN
+        nullable = lambda vals: pd.Series(
+            vals, dtype="float64" if None in vals else "int64"
+        )
+        return pd.DataFrame({
+            "rule_id": [r[1] for r in rows],
+            "bucket": [_bucket(r) for r in rows],
+            "group_id": [f"{r[1]}_{r[2]}" for r in rows],
+            "event_time": pd.to_datetime([r[0] for r in rows], unit="s"),
+            "agg_cents": nullable([r[3] for r in rows]),
+            "window_type": [r[4][0] for r in rows],
+            "window_minutes": [r[4][1] for r in rows],
+            "window_slide_minutes": nullable([r[4][2] for r in rows]),
+        })
+
+    n_fired = n_two_sizes = 0
+    for trial in range(400):
         delay_ms = rng.choice([0, 60_000, 120_000])
         base = rng.choice([0, 1_700_000_000])  # near-epoch or present day
-        rules = {}
-        for rule_id in range(1, rng.randint(1, 3) + 1):
-            wtype = rng.choice(["tumbling", "sliding", "gap"])
-            size_m = rng.randint(1, 4)
-            slide_m = {
-                "tumbling": None,
-                "sliding": rng.randint(1, size_m),
-                "gap": size_m + rng.randint(1, 3),
-            }[wtype]
-            rules[rule_id] = ("tumbling" if wtype == "tumbling" else "sliding",
-                              size_m, slide_m)
+        rules = {rule_id: spec() for rule_id in range(1, rng.randint(1, 4) + 1)}
         rows = [
             (base + rng.randint(0, 900), rng.choice(list(rules)),
              rng.choice(["g0", "g1", "g2", "g3"]),
              None if rng.random() < 0.15 else rng.randint(-500, 5000))
-            for _ in range(rng.randint(1, 60))
+            for _ in range(rng.randint(1, 80))
         ]
         n_batches = rng.randint(1, 4)
         batches = [rows[i::n_batches] for i in range(n_batches)]
@@ -1019,40 +1077,43 @@ def test_live_update_model_random(spark):
         ])
         # watermark pusher: a null measure, so it folds nothing
         batches.append([(base + 100_000, 1, "zz", None)])
+        # from this batch on, one rule has a new window size
+        resize_at, resized = rng.randint(1, n_batches), rng.choice(list(rules))
 
         states: dict[tuple, _FakeGroupState] = {}
         fired: list[tuple] = []
+        fired_wms: list[int] = []  # per fired window: its batch's watermark
+        wms: list[int] = []  # per batch: the watermark it sees
         oracle: dict[tuple, list] = {}
         wm = 0
-        for batch in batches + [[]]:  # trailing no-data batch
+        for i, batch in enumerate(batches + [[]]):  # trailing no-data batch
+            wms.append(wm)
+            if i == resize_at:
+                wtype, size_m, slide_m = rules[resized]
+                rules[resized] = (wtype, size_m + rng.randint(1, 3), slide_m)
+            batch = [(ts, r, g, c, rules[r]) for ts, r, g, c in batch]
             by_key: dict[tuple, list] = {}
             for row in batch:
-                key = (row[1], sum(map(ord, row[2])) % n_buckets)
-                by_key.setdefault(key, []).append(row)
+                by_key.setdefault((_bucket(row),), []).append(row)
             for key, key_rows in by_key.items():
-                wtype, size_m, slide_m = rules[key[0]]
-                pdf = pd.DataFrame({
-                    "rule_id": key[0],
-                    "bucket": key[1],
-                    "group_id": [f"{r[1]}_{r[2]}" for r in key_rows],
-                    "event_time": pd.to_datetime([r[0] for r in key_rows], unit="s"),
-                    # Arrow hands a nullable LONG over as float64 with NaN
-                    "agg_cents": pd.Series(
-                        [r[3] for r in key_rows],
-                        dtype="float64" if any(r[3] is None for r in key_rows) else "int64",
-                    ),
-                    "window_type": wtype,
-                    "window_minutes": size_m,
-                    "window_slide_minutes": slide_m,
-                })
+                cut = rng.randint(1, len(key_rows))
+                frames = [frame(key_rows[:cut])]
+                if cut < len(key_rows):
+                    frames.append(frame(key_rows[cut:]))
                 st = states.setdefault(key, _FakeGroupState())
                 st.wm, st.hasTimedOut = wm, False
-                for out in update(key, iter([pdf]), st):
+                for out in update(key, iter(frames), st):
                     fired.extend(out.itertuples(index=False, name=None))
-                size, slide = size_m * 60, (slide_m or size_m) * 60
-                for ts, rule_id, g, cents in key_rows:
+                    fired_wms.extend([wm] * len(out))
+                if st.exists:
+                    n_two_sizes += any(
+                        len({z for g2, z in zip(st.value[1], st.value[3]) if g2 == g}) > 1
+                        for g in set(st.value[1])
+                    )
+                for ts, rule_id, g, cents, (wtype, size_m, slide_m) in key_rows:
                     if cents is None:
                         continue
+                    size, slide = size_m * 60, (slide_m or size_m) * 60
                     for ws in _oracle_window_starts(ts, wtype, size, slide):
                         if (ws + size) * 1000 <= wm:
                             continue  # late: this window already fired
@@ -1070,6 +1131,7 @@ def test_live_update_model_random(spark):
                 st.wm, st.hasTimedOut, st.timeout = wm, True, None
                 for out in update(key, iter([]), st):
                     fired.extend(out.itertuples(index=False, name=None))
+                    fired_wms.extend([wm] * len(out))
             if batch:
                 wm = max(wm, max(r[0] for r in batch) * 1000 - delay_ms)
 
@@ -1080,7 +1142,16 @@ def test_live_update_model_random(spark):
             for k, (s, c, mn, mx) in oracle.items()
         }
         assert got == expected, f"trial {trial}: {sorted(got)} != {sorted(expected)}"
+        for (r, g, ws, we, *_), fire_wm in zip(fired, fired_wms):
+            # not before the watermark reaches its end, nor after the
+            # first batch whose watermark passes it
+            first_past = next(w for w in wms if w > we * 1000)
+            assert we * 1000 <= fire_wm <= first_past, (
+                f"trial {trial}: window {(r, g, ws, we)} fired at watermark "
+                f"{fire_wm}, first past its end at {first_past}"
+            )
         for key, st in states.items():
             assert not st.exists, f"trial {trial}: state left for {key}: {st.value}"
         n_fired += len(fired)
-    assert n_fired > 1000  # the trials exercise the operator
+    assert n_fired > 3000  # the trials exercise the operator
+    assert n_two_sizes > 50  # ... and the resize puts two sizes in one state
