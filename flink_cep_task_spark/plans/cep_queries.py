@@ -301,8 +301,8 @@ def q_live_streaming(
     spark: SparkSession, sf_dir: str, files_per_trigger: int | None = None
 ) -> DataFrame:
     """STREAMING parity query #1 — the LIVE rule engine: per-micro-batch
-    rule refresh + dynamic-window applyInPandasWithState operator
-    (streaming/live.py), drained with availableNow, append output returned
+    rule refresh + the native window fold gated against the current
+    rules (streaming/live.py), drained with availableNow, append output returned
     as a batch DataFrame. Hash-matches the same DuckDB oracle as the batch
     engine — the correctness gate covers the live path end-to-end.
     `files_per_trigger` overrides the gate's one-data-batch replay (the
@@ -328,7 +328,7 @@ def q_live_streaming(
 
     # ONE data trigger (data + pusher — see _events_stream_workdir); the
     # pusher-advanced watermark then drives Spark's no-data batch, where
-    # every event-time timeout fires.
+    # every open window closes.
     metrics = metrics_stream_from_parquet(
         spark, os.path.join(work, "src"), METRIC_SCHEMA,
         max_files_per_trigger=files_per_trigger or (n_parts + 1),
@@ -344,8 +344,8 @@ def q_streaming_windows(
     spark: SparkSession, sf_dir: str, files_per_trigger: int | None = None
 ) -> DataFrame:
     """STREAMING parity query #2 — the NATIVE windowed pipeline
-    (streaming/pipeline.build_streaming_cep): static rule set, built-in
-    F.window aggregation on the JVM state store, watermark-driven append.
+    (streaming/pipeline.build_streaming_cep): static rule set, the shared
+    window fold on the JVM state store, watermark-driven append.
     The production-default path when rules don't change mid-run; same
     oracle as the batch engine and the live path. `files_per_trigger`
     as in q_live_streaming."""
@@ -370,10 +370,10 @@ def q_streaming_windows(
         spark, os.path.join(work, "src"), METRIC_SCHEMA,
         max_files_per_trigger=files_per_trigger or (n_parts + 1),
     )
-    # one tumbling + one sliding spec: every DISTINCT window spec becomes
-    # its own stateful aggregation in the unioned plan, so the spec count
-    # multiplies state-store cost; two specs exercise W1+W2/A1+A2 natively
-    # (the live path covers the full rule matrix in ONE operator).
+    # one tumbling + one sliding spec share the ONE window fold
+    # (operators.windows.fold_windows) that the live path also runs over
+    # the full rule matrix; here the rules are static and the gate reads
+    # them from a broadcast table.
     windowed, global_s = build_streaming_cep(
         metrics, spark, NATIVE_STREAMING_RULES, watermark="1 minute"
     )
@@ -458,25 +458,27 @@ TIMER_WINDOW_S = 86_400  # epoch-aligned daily tumbling windows
 
 
 def q_timer_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING parity query #4 — the live operator's window fold on its
-    own (streaming/live.live_cep_windows): epoch-aligned daily tumbling
+    """STREAMING parity query #4 — the streaming window fold on its own
+    (operators.windows.fold_windows): epoch-aligned daily tumbling
     windows per event type, each closed exactly once when the watermark
-    passes its end, through applyInPandasWithState event-time timeouts —
-    the principled analog of the reference's TriggerCenter.java:22-26 /
-    Window.java:58-63 timers, swapping wall-clock for the watermark so
+    passes its end and the state store evicts it — the principled
+    analog of the reference's TriggerCenter.java:22-26 / Window.java:58-63
+    timers, swapping wall-clock for the watermark so
     windows are never silently lost (SURVEY quirk Q4). The replay fans
     out to ONE static tumbling rule and returns the fold's UNGATED
-    partials (sum/count/min/max of `value`); the oracle is the plain
-    batch tumbling SQL, so the fold is hash-checked end-to-end. Rows
-    with a null `value` (and the zz_flush pusher, whose only measure is
-    "zzf") fold nothing; the pusher still advances the watermark."""
+    partials (sum/count/min/max of `value`, the decimal partials cast to
+    double like the oracle's); the oracle is the plain batch tumbling
+    SQL, so the fold is hash-checked end-to-end. Rows with a null `value`
+    (and the zz_flush pusher, whose only measure is "zzf") fold nothing;
+    the pusher still advances the watermark."""
     import os
     import uuid
 
     from pyspark.sql import functions as F
 
+    from flink_cep_task_spark.operators.windows import fold_windows
     from flink_cep_task_spark.schemas import METRIC_SCHEMA
-    from flink_cep_task_spark.streaming.live import fanout_live, live_cep_windows
+    from flink_cep_task_spark.streaming.live import fanout_live
     from flink_cep_task_spark.streaming.pipeline import (
         metrics_stream_from_parquet,
         run_to_memory,
@@ -495,7 +497,7 @@ def q_timer_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"timer_cep_{uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 8):
         run_to_memory(
-            live_cep_windows(fanned), name, "append",
+            fold_windows(fanned), name, "append",
             os.path.join(work, f"ckpt_{name}"), timeout_s=600,
         )
     prefix_len = len(f"{rule.rule_id}_")
@@ -503,10 +505,10 @@ def q_timer_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"substr(group_id, {prefix_len + 1})").alias("group_id"),
         "window_start",
         "window_end",
-        F.col("__sum").alias("agg_sum"),
+        F.col("__sum").cast("double").alias("agg_sum"),
         F.col("__cnt").alias("agg_cnt"),
-        F.col("__min").alias("agg_min"),
-        F.col("__max").alias("agg_max"),
+        F.col("__min").cast("double").alias("agg_min"),
+        F.col("__max").cast("double").alias("agg_max"),
     )
 
 
@@ -528,8 +530,8 @@ FROM base GROUP BY group_id, ws
 
 
 R_GAP_SLIDING_SUM = Rule(
-    # slide > size: SAMPLED (gap) windows — the live operator's vectorized
-    # window assignment must leave between-window events unassigned;
+    # slide > size: SAMPLED (gap) windows — the live window fold's
+    # assignment must leave between-window events unassigned;
     # riding in the gated live parity query completes the
     # spec-type × engine-path matrix under the oracle.
     rule_id=7, window_type="sliding", window_minutes=240,

@@ -29,7 +29,7 @@ DRIVER_GATE_CAP = 50
 #
 # Round 6 rotation (VERDICT r5 task #1): six flagship operators added since
 # round 3 — session windows (cep_session_sum), watermark-fired windows
-# (cep_timer_windows, now the live operator's fold), the 12-rule fan-out
+# (cep_timer_windows, now the streaming window fold), the 12-rule fan-out
 # matrix (cep_many_rules), both skew tools (salted_hot_user_join,
 # skewsafe_user_distinct), and the daily-crawl incremental dedup
 # (dedup_incremental) — move INTO the

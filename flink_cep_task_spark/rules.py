@@ -239,9 +239,9 @@ def compact_rule_list(rules: list["Rule"]) -> list["Rule"]:
     """Last seq wins per rule_id (the later list entry on a seq tie),
     then ACTIVE only (DELETE tombstones and PAUSEd rules drop). The ONE
     compaction of in-memory rule lists — the oracle generator, plan-shape
-    routing, window-spec grouping and the batch plans' rule table all
-    share it, so the engine and the oracle cannot keep different
-    versions of a rule."""
+    routing and the batch and native streaming rule tables all share it,
+    so the engine and the oracle cannot keep different versions of a
+    rule."""
     latest: dict[int, Rule] = {}
     for r in sorted(rules, key=lambda r: r.seq):
         latest[r.rule_id] = r

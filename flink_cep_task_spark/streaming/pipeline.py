@@ -8,8 +8,8 @@ Replaces the reference's runtime machinery 1:1 (SURVEY.md §3.3):
                                  (B1-B3; rule table re-resolved each batch, so
                                  rule CRUD takes effect at the next trigger —
                                  the deliberate fix of reference quirk Q6)
-  keyBy + WindowAssigner/state → groupBy(group_id, window(...)) on the state
-                                 store (K1, W0-W5)
+  keyBy + WindowAssigner/state → one native groupBy(rule_id, group_id, window)
+                                 on the state store (K1, W0-W5)
   TriggerCenter timer thread   → event-time watermark (T1-T3; fixes the
                                  wall-clock firing defect Q4 — windows fire
                                  when the WATERMARK passes their end, results
@@ -18,27 +18,38 @@ Replaces the reference's runtime machinery 1:1 (SURVEY.md §3.3):
   print sink                   → any writeStream sink (O1)
   restart strategy             → checkpointLocation (R1/R2)
 
-Window sizes are rule data, but Structured Streaming's state-store eviction
-needs literal `window()` durations — so rules are grouped by their
-(window_type, size, slide) spec and each spec group becomes one windowed
-aggregation; the spec streams union into a single append-mode stream.
-Global-window rules (no window end — reference AllWindowAssigner never
-fires, Q5) become a separate UPDATE-mode aggregation that emits per batch.
+Window sizes are rule data, so windows are assigned as data
+(operators.windows.assign_windows) and every tumbling/sliding rule shares
+ONE stateful aggregation (operators.windows.fold_windows) that the
+watermark evicts at each window's end; every session rule shares ONE
+F.session_window branch with a per-row gap (fold_sessions). Both are
+config-free and gated against the static rule table (gate_windows), and
+they union into a single append-mode stream — the same folds the live
+engine (streaming/live.py) runs. Global-window rules (no window end —
+reference AllWindowAssigner never fires, Q5) become a separate
+UPDATE-mode aggregation that emits per batch.
 
-At scale: each spec group shuffles on (rule_id, group_id, window) — state is
+At scale: the fold shuffles on (rule_id, group_id, window) — state is
 hash-partitioned across executors; watermark bounds state size; no
 driver-side loops anywhere.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_cep_task_spark.operators.fanout import fanout_rules
-from flink_cep_task_spark.operators.windows import gate_windows, partial_aggs
+from flink_cep_task_spark.operators.windows import (
+    fold_sessions,
+    fold_windows,
+    gate_windows,
+    partial_aggs,
+)
 from flink_cep_task_spark.rules import Rule, compact_rule_list, rules_df
 from flink_cep_task_spark.sources.jsonline import parse_metric_lines
+from flink_cep_task_spark.streaming.live import fanout_live
 
 DEFAULT_WATERMARK = "10 minutes"
 
@@ -205,14 +216,6 @@ def kafka_records_to_metrics(records: DataFrame) -> DataFrame:
     return parse_metric_lines(lines, value_col="value")
 
 
-def _window_specs(active: list[Rule]) -> dict[tuple, list[Rule]]:
-    groups: dict[tuple, list[Rule]] = {}
-    for r in active:
-        key = (r.window_type, r.window_minutes, r.window_slide_minutes)
-        groups.setdefault(key, []).append(r)
-    return groups
-
-
 def build_streaming_cep(
     metrics: DataFrame,
     spark: SparkSession,
@@ -224,84 +227,36 @@ def build_streaming_cep(
     windowed_stream: append-mode; one row per closed (rule, group, window)
     passing its threshold, schema identical to the batch engine's output.
     global_stream: update-mode running aggregates for global-window rules.
+    Either is None when no rule of its kind is active.
     """
     active = compact_rule_list(rules)
-    # engine-wide time domain is EPOCH SECONDS (TS_S in every batch
-    # oracle). Boundary-aligned tumbling/sliding assignment is indifferent
-    # to sub-second precision, but SESSION merge distances are not: two
-    # events 120.9 s apart must merge under a 2-minute gap exactly like
-    # the batch engine's second-truncated islands. Truncate before the
-    # watermark so every downstream stateful op lives in the same domain.
-    wm = metrics.withColumn(
-        "event_time", F.date_trunc("second", F.col("event_time"))
-    ).withWatermark("event_time", watermark)
-    fanned = fanout_rules(wm, rules_df(spark, active))
+    table = rules_df(spark, active)
+    fanned = fanout_live(metrics, table, watermark)
+    kinds = {r.window_type for r in active}
 
-    windowed_parts: list[DataFrame] = []
-    global_part: DataFrame | None = None
-    for (wtype, minutes, slide), specs in _window_specs(active).items():
-        ids = [r.rule_id for r in specs]
-        part = fanned.filter(F.col("rule_id").isin(ids))
-        if wtype == "global":
-            g = gate_windows(
-                part.groupBy("rule_id", "group_id", "agg_type", "limit_op", "limit")
-                .agg(*partial_aggs())
-                .withColumns({
-                    "window_start": F.lit(None).cast("long"),
-                    "window_end": F.lit(None).cast("long"),
-                })
-            )
-            global_part = g if global_part is None else global_part.unionByName(g)
-            continue
-        dur = f"{minutes} minutes"
-        end_col = F.col("w.end").cast("long")
-        if wtype == "session":
-            # gap-merged sessions ride the NATIVE F.session_window state
-            # (windowMinutes = the gap, matching the batch engine's
-            # evaluate_session_windows: bounds [min_ts, last_ts + gap))
-            win = F.session_window("event_time", dur)
-        elif wtype == "tumbling":
-            win = F.window("event_time", dur)
-        elif slide > minutes:
-            # slide > size ⇒ SAMPLED (gap) windows, which F.window rejects
-            # outright. A gap window [k·slide, k·slide+size) is exactly a
-            # slide-length tumbling window restricted to its first `size`
-            # minutes: filter events to the sampled region (epoch-aligned,
-            # like the batch assigner), tumble by the slide, and re-derive
-            # the window end as start+size. Events between windows belong
-            # to NOTHING — the filter drops them before any state.
-            # Known latency: append-mode emission waits for the watermark
-            # to pass the CARRIER window's end (start+slide), up to
-            # slide−size of event time after the logical close — contents
-            # are exact (nothing past start+size can enter: the sample
-            # filter excludes it), results on drained runs identical; a
-            # latency-sensitive consumer should prefer the live engine's
-            # dynamic operator, which closes gap windows at start+size.
-            part = part.filter(
-                F.col("event_time").cast("long") % (slide * 60) < minutes * 60
-            )
-            win = F.window("event_time", f"{slide} minutes")
-            end_col = F.col("w.start").cast("long") + minutes * 60
-        else:
-            win = F.window("event_time", dur, f"{slide} minutes")
-        windowed_parts.append(
-            gate_windows(
-                part.groupBy(
-                    "rule_id", "group_id", win.alias("w"), "agg_type", "limit_op", "limit"
-                )
-                .agg(*partial_aggs())
-                .withColumns({
-                    "window_start": F.col("w.start").cast("long"),
-                    "window_end": end_col,
-                })
-            )
-        )
-
+    # every branch scans the source once more per batch, so each is only
+    # built when a rule of its kind is active
+    parts = []
+    if kinds & {"tumbling", "sliding"}:
+        parts.append(fold_windows(fanned))
+    if "session" in kinds:
+        parts.append(fold_sessions(fanned).drop("__gap"))
     windowed = None
-    if windowed_parts:
-        windowed = windowed_parts[0]
-        for p in windowed_parts[1:]:
-            windowed = windowed.unionByName(p)
+    if parts:
+        config = F.broadcast(table.select("rule_id", "agg_type", "limit_op", "limit"))
+        windowed = gate_windows(reduce(DataFrame.unionByName, parts).join(config, "rule_id"))
+
+    global_part = None
+    if "global" in kinds:
+        global_part = gate_windows(
+            fanned.filter(F.col("window_type") == "global")
+            .groupBy("rule_id", "group_id", "agg_type", "limit_op", "limit")
+            .agg(*partial_aggs())
+            .withColumns({
+                "window_start": F.lit(None).cast("long"),
+                "window_end": F.lit(None).cast("long"),
+            })
+        )
     return windowed, global_part
 
 

@@ -17,10 +17,10 @@ replay scaffold the correctness gate runs — in THREE configurations:
                        tests/test_streaming_ops.py).
 
 Paths:
-  * cep_live_streaming  — the LIVE rule engine (applyInPandasWithState
-    dynamic-window operator, per-micro-batch rule refresh)
-  * cep_streaming_windows — the NATIVE windowed pipeline (built-in
-    F.window aggs on the JVM state store; one tumbling + one SLIDING
+  * cep_live_streaming  — the LIVE rule engine (the native window fold,
+    gated per micro-batch against the refreshed rule table)
+  * cep_streaming_windows — the NATIVE windowed pipeline (the same fold
+    on the JVM state store, static rules; one tumbling + one SLIDING
     rule, so the sliding-window state row counts are in stateOperators)
 
 Method: run each query at $SPARK_GRAFT_SF_DIR (default sf0.1,

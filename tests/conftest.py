@@ -127,7 +127,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_streaming_gap_sliding_rule_matches_batch",  # 11.2
     "test_rules_fuzz.py::test_wire_parser_twins_agree_and_never_crash",  # 10.9
     "test_kafka_ingest.py::test_kafka_ingest_end_to_end_matches_batch",  # 10.4
-    "test_live_rules.py::test_output_invariant_to_state_bucket_count",  # 10.2
     "test_cep_e2e.py::test_cep_query_matches_oracle[cep_late_data_policy]",  # 10.0
     # second measured batch (fast-tier durations, same round): everything
     # still >= 10 s after the first cut; each family keeps a faster

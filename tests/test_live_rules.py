@@ -639,73 +639,48 @@ def test_dual_socket_rules_and_metrics(spark, tmp_path):
     assert all(v == 1.0 for _s, _e, v in r7)
 
 
-def test_output_invariant_to_state_bucket_count(spark, tmp_path):
-    """State coarsening is a layout decision, not a semantic one: the live
-    engine must produce identical results with 1 bucket (everything in one
-    key) and the default 64 (groups spread across keys)."""
-    events = _events()
-    results = []
-    for buckets in (1, 64):
-        (tmp_path / f"b{buckets}").mkdir(exist_ok=True)
-        src = _write_chunks(tmp_path / f"b{buckets}", events)
-        store = RuleFileStore(str(tmp_path / f"rules_b{buckets}.json"))
-        store.upsert(R1_WIRE)
-        store.upsert(R2_WIRE)
-        metrics = metrics_stream_from_text(spark, src, max_files_per_trigger=3)
-        out = build_live_cep(metrics, spark, store.path, watermark="1 minute",
-                             state_buckets=buckets)
-        name = f"bk_{buckets}_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_b{buckets}"))
-            .trigger(availableNow=True).start()
-        )
-        await_stream(q, 180)
-        rows = spark.table(name).filter(~F.col("group_id").contains(FLUSH_TAG)).collect()
-        results.append(sorted(
-            (r.rule_id, r.group_id, r.window_start, r.window_end, r.agg_type, r.agg_value)
-            for r in rows
-        ))
-    assert results[0] == results[1]
-    assert len(results[0]) > 0
-
-
-def test_live_state_holds_one_row_per_bucket(spark, tmp_path):
-    """The live operator is keyed by hash bucket alone: however many rules
-    are active, the state store holds at most one row per bucket (keyed
-    by (rule, bucket), 6 rules over 4 buckets would hold up to 24)."""
-    events = [
-        {"eventTime": 1_700_000_000_000 + i * 15_000, "t_g": f"g{i % 40}", "m": i % 9}
-        for i in range(400)
-    ]
+def test_fold_state_falls_to_the_pushers_open_windows(spark, tmp_path):
+    """Closed windows leave the state store: after the watermark pushers
+    flush the stream, the window fold's numRowsTotal equals the number of
+    windows the pushers themselves still hold open, and nothing of the
+    data's windows is left behind."""
+    events = _events(n=60)
     src = _write_chunks(tmp_path, events)
-    store = RuleFileStore(str(tmp_path / "rules_one_row.json"))
-    for rule_id in range(1, 7):
-        wire = R1_WIRE if rule_id % 2 else R2_WIRE
-        store.upsert({**wire, "ruleId": rule_id, "windowMinutes": 5 * rule_id,
-                      "limit": -1})
+    store = RuleFileStore(str(tmp_path / "rules_state.json"))
+    store.upsert(R1_WIRE)
+    store.upsert(R2_WIRE)
     metrics = metrics_stream_from_text(spark, src, max_files_per_trigger=1)
-    out = build_live_cep(metrics, spark, store.path, watermark="1 minute",
-                         state_buckets=4)
-    name = f"one_row_{uuid.uuid4().hex[:8]}"
+    out = build_live_cep(metrics, spark, store.path, watermark="1 minute")
+    name = f"state_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_one_row"))
+        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
         .trigger(availableNow=True).start()
     )
     await_stream(q, 180)
     state_rows = [p.stateOperators[0].numRowsTotal for p in q.recentProgress]
-    assert state_rows and max(state_rows) > 0, state_rows
-    assert all(n <= 4 for n in state_rows), state_rows
+    # the two pushers (see _write_chunks) and the final watermark
+    max_s = max(e["eventTime"] for e in events) // 1000
+    pushers = [max_s + 86_400, max_s + 86_500]
+    final_wm = pushers[-1] - 60
+    pusher_open = {
+        (rule, start)
+        for rule, wtype, size, slide in [(1, "tumbling", 300, 300), (2, "sliding", 600, 300)]
+        for ts in pushers
+        for start in _oracle_window_starts(ts, wtype, size, slide)
+        if start + size > final_wm
+    }
+    assert state_rows[-1] == len(pusher_open), state_rows
+    assert max(state_rows) > len(pusher_open), state_rows
     assert spark.table(name).count() > 0
 
 
 def test_live_engine_handles_near_epoch_timestamps(spark, tmp_path):
     """Sliding windows covering events near epoch 0 start at NEGATIVE
     seconds (the reference's own unit tests use ts=1ms,
-    TumblingWindowAssignerTest.java) — the bucketed fold's key packing must
-    not corrupt them. Streaming output must equal the batch engine on the
-    same tiny-timestamp data."""
+    TumblingWindowAssignerTest.java) — the fold's window assignment and
+    its timestamp window-end key must keep them. Streaming output must
+    equal the batch engine on the same tiny-timestamp data."""
     events = [
         {"eventTime": 30_000, "t_g": "g0", "m": 5},      # 30 s
         {"eventTime": 90_000, "t_g": "g0", "m": 7},      # 90 s
@@ -741,16 +716,18 @@ def test_live_engine_handles_near_epoch_timestamps(spark, tmp_path):
     )
     assert got == expected
     assert any(ws < 0 for _r, _g, ws, _we, _v in got), (
-        "expected at least one negative-start window to prove the packing path"
+        "expected at least one negative-start window"
     )
 
 
 def test_watermark_drops_late_rows_keeps_out_of_order(spark, tmp_path):
     """T1-T3 semantics, pinned: an out-of-order row that arrives WITHIN the
-    watermark still lands in its (already-open) window; a row arriving
-    AFTER the watermark passed its window's end is dropped — never a
-    double-fire, never a resurrected window (the reference's wall-clock
-    trigger either lost such results entirely — quirk Q4 — or re-fired)."""
+    watermark still lands in its (already-open) window; so does a row of
+    a window that closes in the batch the row arrives in (Spark filters
+    late rows by the previous batch's watermark); a row arriving after
+    its window fired is dropped and counted once — never a double-fire,
+    never a resurrected window (the reference's wall-clock trigger
+    either lost such results entirely — quirk Q4 — or re-fired)."""
     base_ms = 1_700_000_040_000  # 2-min epoch aligned
     src = tmp_path / f"late-{uuid.uuid4().hex[:8]}"
     src.mkdir()
@@ -772,12 +749,16 @@ def test_watermark_drops_late_rows_keeps_out_of_order(spark, tmp_path):
     # batch 1: seconds 0 and 180 (watermark after batch: 180s - 60s delay =
     # 120s → window [0,2min) is closeable from batch 2 on)
     write_file(0, [mk(0, 1), mk(180, 1)])
-    # batch 2: second 150 (in-order for [2,4)) AND second 60 — LATE: its
-    # window [0,2) end (120s) ≤ watermark (120s), so the row must be
-    # discarded and [0,2) must fire WITHOUT it, exactly once
+    # batch 2: second 150 (in-order for [2,4)) AND second 60, for [0,2).
+    # Spark filters late rows by the PREVIOUS batch's watermark (0 here)
+    # and closes windows by the current one (120s), so the second-60 row
+    # still counts and [0,2) fires with it, exactly once — as the batch
+    # oracle counts it
     write_file(1, [mk(150, 1), mk(60, 100)])
-    # batch 3: second 210 out-of-order-within-watermark for open window [2,4)
-    write_file(2, [mk(210, 1)])
+    # batch 3: second 210 out-of-order-within-watermark for open window
+    # [2,4), and second 90 — LATE: [0,2) has fired, so the row is dropped
+    # (and counted), never merged into a resurrected window
+    write_file(2, [mk(210, 1), mk(90, 1000)])
     # pushers
     write_file(3, [{"eventTime": base_ms + 12_000_000, "t_g": FLUSH_TAG, "m": 0}])
     write_file(4, [{"eventTime": base_ms + 12_060_000, "t_g": FLUSH_TAG, "m": 0}])
@@ -796,9 +777,14 @@ def test_watermark_drops_late_rows_keeps_out_of_order(spark, tmp_path):
         (r.window_start - base_s, r.window_end - base_s, r.agg_value)
         for r in spark.table(name).collect() if FLUSH_TAG not in r.group_id
     )
-    # [0,2): ONLY the second-0 row (late second-60 row dropped, no re-fire);
+    # [0,2): seconds 0 and 60 (the late second-90 row dropped, no re-fire);
     # [2,4): seconds 150, 180, 210 — the out-of-order 210 row counted.
-    assert got == [(0, 120, 1.0), (120, 240, 3.0)], got
+    assert got == [(0, 120, 101.0), (120, 240, 3.0)], got
+    dropped = sum(
+        op.numRowsDroppedByWatermark
+        for p in q.recentProgress for op in p.stateOperators
+    )
+    assert dropped == 1, dropped
 
 
 def test_new_tag_key_appearing_mid_stream(spark, tmp_path):
@@ -850,9 +836,8 @@ def test_new_tag_key_appearing_mid_stream(spark, tmp_path):
 def test_gap_rule_survives_gap_only_micro_batch(spark, tmp_path):
     """Regression (found by the round-10 steady-state throughput replay):
     a GAP-window rule (slide > size) in a MULTI-micro-batch cadence can
-    hand the stateful operator a batch slice whose events ALL fall
-    between windows — the vectorized cover loop then collects zero
-    arrays and np.concatenate raised. The one-data-batch gate replay
+    hand the window fold a batch slice whose events ALL fall between
+    windows; it must fold nothing and not fail. The one-data-batch gate replay
     could never hit this (100k events always cover some window), which
     is exactly why throughput measurement must run the real cadence.
     Output must equal the batch engine's on the same data."""
@@ -919,71 +904,6 @@ def test_gap_rule_survives_gap_only_micro_batch(spark, tmp_path):
     assert len(got) == 1  # exactly the in-window event's window fires
 
 
-class _FakeGroupState:
-    """Pure-python GroupState for replaying the live operator's update
-    function. Mirrors the API contract the operator relies on: a timeout
-    must lie strictly past the current watermark, and remove() drops the
-    timeout with the state."""
-
-    def __init__(self):
-        self.value = None
-        self.timeout = None
-        self.wm = 0
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self.value is not None
-
-    @property
-    def get(self):
-        return self.value
-
-    def update(self, v):
-        self.value = v
-
-    def remove(self):
-        self.value = None
-        self.timeout = None
-
-    def setTimeoutTimestamp(self, ms):
-        assert ms > self.wm, f"timeout {ms} not past the watermark {self.wm}"
-        self.timeout = ms
-
-    def getCurrentWatermarkMs(self):
-        return self.wm
-
-
-def _capture_live_update(spark):
-    """live_cep_windows' `update` function, reached through a fake
-    DataFrame that records what applyInPandasWithState receives."""
-    from flink_cep_task_spark.streaming.live import live_cep_windows
-
-    captured = {}
-
-    class _CaptureDF:
-        def filter(self, *a):
-            return self
-
-        def withColumn(self, *a):
-            return self
-
-        def select(self, *a):
-            return self
-
-        def groupBy(self, *a):
-            captured["groupBy"] = a
-            return self
-
-        def applyInPandasWithState(self, fn, **kw):
-            captured.update(kw, fn=fn)
-
-    live_cep_windows(_CaptureDF())
-    assert captured["groupBy"] == ("bucket",)
-    assert captured["timeoutConf"] == "EventTimeTimeout"
-    return captured["fn"]
-
-
 def _oracle_window_starts(ts: int, wtype: str, size: int, slide: int) -> list[int]:
     """Every window [start, start + size) that contains `ts`: tumbling
     windows tile the size grid; sliding windows start on the slide grid
@@ -997,161 +917,53 @@ def _oracle_window_starts(ts: int, wtype: str, size: int, slide: int) -> list[in
     ]
 
 
-def test_live_update_model_random(spark):
-    """Model test of the live operator's update function: Spark's
-    invocation protocol is replayed against a fake state, and the fired
-    partials are compared with a plain-Python window oracle.
+def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
+    """One session branch serves every gap: a session rule whose gap no
+    stored rule had at build time, upserted while the query runs, emits
+    its sessions from the next batch on — no restart."""
+    base_ms = 1_700_000_400_000  # 10-min epoch aligned
+    mk = lambda sec: {"eventTime": base_ms + sec * 1000, "t_g": "g0", "m": 1}
+    src = tmp_path / f"sgap-{uuid.uuid4().hex[:8]}"
+    src.mkdir()
+    t0 = time.time() - 120
 
-    The operator is keyed by hash bucket alone, so one key's frame mixes
-    the rows of several rules, each row carrying its own rule's window
-    spec. Per micro-batch, every bucket with rows gets one data call
-    (hasTimedOut=False), its rows split over one or two frames; then
-    every bucket without rows whose timeout lies strictly below the
-    watermark gets a timed-out call with its timeout cleared. The
-    watermark a batch sees is max(event time of EARLIER batches) minus
-    the delay, and never moves back. A trailing no-data batch runs after
-    the watermark pusher. Trials vary the window type (tumbling, sliding,
-    gap sliding with slide > size), null measures, near-epoch timestamps
-    (negative sliding starts), late rows, the watermark delay and a
-    mid-trial resize of one rule, after which a group holds windows of
-    two sizes in one key's state. Every non-late row lands in every
-    window that contains it, each window fires exactly once, no timeout
-    is ever armed at or behind the watermark, no window fires later than
-    the first batch whose watermark passes its end, and no state is left
-    after the flush."""
-    import random
+    def write_file(idx: int, doc: dict) -> None:
+        p = src / f"{idx:04d}.json"
+        p.write_text(json.dumps(doc))
+        os.utime(p, (t0 + idx, t0 + idx))
 
-    import pandas as pd
+    session = {"windowType": "session", "groupingKeyNames": ["t_g"],
+               "aggregatorFunctionType": "SUM", "aggregateFieldName": "m",
+               "limitOperatorType": ">", "limit": 0}
+    store = RuleFileStore(str(tmp_path / "rules_sgap.json"))
+    store.upsert({**session, "ruleId": 1, "windowMinutes": 2})
+    write_file(0, mk(0))
 
-    update = _capture_live_update(spark)
-    rng = random.Random(20260417)
-    n_buckets = 3
-
-    def spec():
-        wtype = rng.choice(["tumbling", "sliding", "gap"])
-        size_m = rng.randint(1, 4)
-        slide_m = {
-            "tumbling": None,
-            "sliding": rng.randint(1, size_m),
-            "gap": size_m + rng.randint(1, 3),
-        }[wtype]
-        return ("tumbling" if wtype == "tumbling" else "sliding", size_m, slide_m)
-
-    _bucket = lambda row: sum(map(ord, f"{row[1]}_{row[2]}")) % n_buckets
-
-    def frame(rows):
-        # one row per (ts, rule, group, cents, spec); Arrow hands a
-        # nullable LONG/INT column over as float64 with NaN
-        nullable = lambda vals: pd.Series(
-            vals, dtype="float64" if None in vals else "int64"
-        )
-        return pd.DataFrame({
-            "rule_id": [r[1] for r in rows],
-            "bucket": [_bucket(r) for r in rows],
-            "group_id": [f"{r[1]}_{r[2]}" for r in rows],
-            "event_time": pd.to_datetime([r[0] for r in rows], unit="s"),
-            "agg_cents": nullable([r[3] for r in rows]),
-            "window_type": [r[4][0] for r in rows],
-            "window_minutes": [r[4][1] for r in rows],
-            "window_slide_minutes": nullable([r[4][2] for r in rows]),
-        })
-
-    n_fired = n_two_sizes = 0
-    for trial in range(400):
-        delay_ms = rng.choice([0, 60_000, 120_000])
-        base = rng.choice([0, 1_700_000_000])  # near-epoch or present day
-        rules = {rule_id: spec() for rule_id in range(1, rng.randint(1, 4) + 1)}
-        rows = [
-            (base + rng.randint(0, 900), rng.choice(list(rules)),
-             rng.choice(["g0", "g1", "g2", "g3"]),
-             None if rng.random() < 0.15 else rng.randint(-500, 5000))
-            for _ in range(rng.randint(1, 80))
-        ]
-        n_batches = rng.randint(1, 4)
-        batches = [rows[i::n_batches] for i in range(n_batches)]
-        # late rows: arrive after later event times moved the watermark on
-        batches.append([
-            (base + rng.randint(0, 300), rng.choice(list(rules)), "g0",
-             rng.randint(0, 99))
-            for _ in range(rng.randint(0, 3))
-        ])
-        # watermark pusher: a null measure, so it folds nothing
-        batches.append([(base + 100_000, 1, "zz", None)])
-        # from this batch on, one rule has a new window size
-        resize_at, resized = rng.randint(1, n_batches), rng.choice(list(rules))
-
-        states: dict[tuple, _FakeGroupState] = {}
-        fired: list[tuple] = []
-        fired_wms: list[int] = []  # per fired window: its batch's watermark
-        wms: list[int] = []  # per batch: the watermark it sees
-        oracle: dict[tuple, list] = {}
-        wm = 0
-        for i, batch in enumerate(batches + [[]]):  # trailing no-data batch
-            wms.append(wm)
-            if i == resize_at:
-                wtype, size_m, slide_m = rules[resized]
-                rules[resized] = (wtype, size_m + rng.randint(1, 3), slide_m)
-            batch = [(ts, r, g, c, rules[r]) for ts, r, g, c in batch]
-            by_key: dict[tuple, list] = {}
-            for row in batch:
-                by_key.setdefault((_bucket(row),), []).append(row)
-            for key, key_rows in by_key.items():
-                cut = rng.randint(1, len(key_rows))
-                frames = [frame(key_rows[:cut])]
-                if cut < len(key_rows):
-                    frames.append(frame(key_rows[cut:]))
-                st = states.setdefault(key, _FakeGroupState())
-                st.wm, st.hasTimedOut = wm, False
-                for out in update(key, iter(frames), st):
-                    fired.extend(out.itertuples(index=False, name=None))
-                    fired_wms.extend([wm] * len(out))
-                if st.exists:
-                    n_two_sizes += any(
-                        len({z for g2, z in zip(st.value[1], st.value[3]) if g2 == g}) > 1
-                        for g in set(st.value[1])
-                    )
-                for ts, rule_id, g, cents, (wtype, size_m, slide_m) in key_rows:
-                    if cents is None:
-                        continue
-                    size, slide = size_m * 60, (slide_m or size_m) * 60
-                    for ws in _oracle_window_starts(ts, wtype, size, slide):
-                        if (ws + size) * 1000 <= wm:
-                            continue  # late: this window already fired
-                        agg = oracle.setdefault(
-                            (rule_id, f"{rule_id}_{g}", ws, ws + size),
-                            [0, 0, cents, cents],
-                        )
-                        agg[0] += cents
-                        agg[1] += 1
-                        agg[2] = min(agg[2], cents)
-                        agg[3] = max(agg[3], cents)
-            for key, st in states.items():
-                if key in by_key or st.timeout is None or st.timeout >= wm:
-                    continue
-                st.wm, st.hasTimedOut, st.timeout = wm, True, None
-                for out in update(key, iter([]), st):
-                    fired.extend(out.itertuples(index=False, name=None))
-                    fired_wms.extend([wm] * len(out))
-            if batch:
-                wm = max(wm, max(r[0] for r in batch) * 1000 - delay_ms)
-
-        got = {(r, g, ws, we): (s, c, mn, mx) for r, g, ws, we, s, c, mn, mx in fired}
-        assert len(got) == len(fired), f"trial {trial}: a window fired twice"
-        expected = {
-            k: (s / 100.0, c, mn / 100.0, mx / 100.0)
-            for k, (s, c, mn, mx) in oracle.items()
-        }
-        assert got == expected, f"trial {trial}: {sorted(got)} != {sorted(expected)}"
-        for (r, g, ws, we, *_), fire_wm in zip(fired, fired_wms):
-            # not before the watermark reaches its end, nor after the
-            # first batch whose watermark passes it
-            first_past = next(w for w in wms if w > we * 1000)
-            assert we * 1000 <= fire_wm <= first_past, (
-                f"trial {trial}: window {(r, g, ws, we)} fired at watermark "
-                f"{fire_wm}, first past its end at {first_past}"
-            )
-        for key, st in states.items():
-            assert not st.exists, f"trial {trial}: state left for {key}: {st.value}"
-        n_fired += len(fired)
-    assert n_fired > 3000  # the trials exercise the operator
-    assert n_two_sizes > 50  # ... and the resize puts two sizes in one state
+    metrics = metrics_stream_from_text(spark, str(src), max_files_per_trigger=1)
+    out = build_live_cep(metrics, spark, store.path, watermark="1 minute")
+    name = f"sgap_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_sgap"))
+        .trigger(processingTime="200 milliseconds").start()
+    )
+    try:
+        q.processAllAvailable()
+        store.upsert({**session, "ruleId": 2, "windowMinutes": 5})
+        for i, sec in enumerate([60, 120, 180, 240], start=1):
+            write_file(i, mk(sec))
+        # two pushers: the first moves the watermark past every session,
+        # the batch of the second closes them
+        write_file(5, {"eventTime": base_ms + 12_000_000, "t_g": FLUSH_TAG, "m": 0})
+        write_file(6, {"eventTime": base_ms + 12_060_000, "t_g": FLUSH_TAG, "m": 0})
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    base_s = base_ms // 1000
+    got = sorted(
+        (r.rule_id, r.window_start - base_s, r.window_end - base_s, r.agg_value)
+        for r in spark.table(name).collect() if FLUSH_TAG not in r.group_id
+    )
+    # rule 1 (2-min gap): seconds 0..240 → [0, 360); rule 2 (5-min gap,
+    # live from file 1 on): seconds 60..240 → [60, 540)
+    assert got == [(1, 0, 360, 5.0), (2, 60, 540, 4.0)], got

@@ -264,8 +264,8 @@ def test_streaming_first_event_tumbling_discards_late_rows(spark, tmp_path):
 
 
 def test_native_checkpoint_restart_resume(spark, tmp_path):
-    """R1 for the NATIVE windowed path (build_streaming_cep — the JVM
-    state-store pipeline, not the live operator): stop after half the
+    """R1 for the NATIVE windowed path (build_streaming_cep — static
+    rules, not the live rule store): stop after half the
     input, restart a NEW query from the SAME checkpoint, feed the rest.
     The union of both runs equals one continuous run — the [2,4) window
     spanning the restart fires exactly once, from state restored off the
@@ -392,10 +392,10 @@ def test_live_engine_mixed_session_and_tumbling_rules(spark, tmp_path):
 
 def test_streaming_gap_sliding_rule_matches_batch(spark, tmp_path):
     """slide > size (SAMPLED gap windows — F.window rejects the spec
-    outright): the streaming path expresses a gap window as a
-    slide-length tumble over the sample-filtered region with the end
-    re-derived as start+size, and must equal the batch engine's gap
-    assignment — including that events BETWEEN windows count nowhere."""
+    outright): the streaming fold assigns windows with the batch
+    engine's arithmetic, closes a gap window at start+size and must
+    equal the batch engine — including that events BETWEEN windows
+    count nowhere."""
     r = Rule(rule_id=5, window_type="sliding", window_minutes=4,
              window_slide_minutes=10, grouping_keys=("t_g",),
              agg_type="SUM", agg_field="m", limit_op=">", limit="0")
