@@ -111,9 +111,10 @@ def fold_windows(fanned: DataFrame) -> DataFrame:
 
 
 def fold_sessions(fanned: DataFrame) -> DataFrame:
-    """The streaming session fold: one F.session_window over every
-    session rule, its gap read per row from `window_minutes` → config-
-    free partials per (rule, group, session), with the gap as `__gap`.
+    """The session fold of every surface (batch, native and live
+    streaming): one F.session_window over every session rule, its gap
+    read per row from `window_minutes` → config-free partials per
+    (rule, group, session), with the gap as `__gap`.
     The gap is part of the key, so a rule whose gap changes starts new
     sessions and the gate drops the old-gap ones."""
     gap = F.concat(F.col("window_minutes").cast("string"), F.lit(" minutes"))
@@ -207,41 +208,6 @@ def gate_windows(partials: DataFrame) -> DataFrame:
     )
 
 
-def evaluate_session_windows(fanned: DataFrame) -> DataFrame:
-    """Gap-based session windows — an engine extension beyond the
-    reference's tumbling/sliding/global triple (CEPEngine.java:75-81).
-
-    `window_minutes` is the inactivity gap: events of a (rule, group) whose
-    timestamps are less than `gap` apart merge into one session; the window
-    closes at last_event + gap (Spark's native semantics). Uses
-    `F.session_window` with a DYNAMIC per-row gap column, so rules with
-    different gaps still evaluate in one pass — one shuffle keyed by
-    (rule_id, group_id), state merged by Spark's session-merge exec, no
-    per-rule driver loop.
-
-    Event time is truncated to whole epoch seconds BEFORE sessionization
-    (the same seconds resolution the rest of the engine uses for window
-    arithmetic), which keeps session bounds integral and the oracle's
-    lag/cumsum island reconstruction bit-exact.
-    """
-    gap_s = F.col("window_minutes").cast("long") * SECONDS_PER_MINUTE
-    sec_ts = F.timestamp_seconds(F.col("event_time").cast("long"))
-    w = fanned.withColumn("__ts", sec_ts).groupBy(
-        "rule_id",
-        "group_id",
-        F.session_window(F.col("__ts"), F.concat(gap_s.cast("string"), F.lit(" seconds"))).alias("__w"),
-        "agg_type",
-        "limit_op",
-        "limit",
-    ).agg(*partial_aggs())
-    return gate_windows(
-        w.withColumns({
-            "window_start": F.col("__w.start").cast("long"),
-            "window_end": F.col("__w.end").cast("long"),
-        })
-    )
-
-
 def round_half_up(col, digits: int = ROUND_DIGITS):
     """floor(x·10^d + 0.5)/10^d — the ONE rounding formula every engine
     surface (gate_windows) and the DuckDB oracle apply to agg_value.
@@ -259,13 +225,7 @@ def round_half_up(col, digits: int = ROUND_DIGITS):
     return (F.floor(F.col(col) * scale + F.lit(0.5)) / scale).cast("double")
 
 
-def evaluate_windows(fanned: DataFrame, round_digits: int = ROUND_DIGITS) -> DataFrame:
+def evaluate_windows(fanned: DataFrame) -> DataFrame:
     """Full W+A pipeline: assign → aggregate → gate (gate_windows'
-    output schema).
-
-    `round_digits` is deprecated and kept only so the signature stays
-    stable for existing callers: agg_value is always rounded to
-    ROUND_DIGITS, the oracle's precision, and any other value raises."""
-    if round_digits != ROUND_DIGITS:
-        raise ValueError(f"agg_value is rounded to {ROUND_DIGITS} digits")
+    output schema)."""
     return gate_windows(aggregate_windows(assign_windows(fanned)))

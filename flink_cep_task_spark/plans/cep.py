@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
-from flink_cep_task_spark.operators.windows import evaluate_windows
+from flink_cep_task_spark.operators.windows import (
+    evaluate_windows,
+    fold_sessions,
+    gate_windows,
+)
 from flink_cep_task_spark.rules import (
     Rule,
     compact_rule_list,
@@ -43,24 +47,23 @@ def evaluate_rules(spark: SparkSession, metrics: DataFrame, rules: list[Rule]) -
     explode, one shuffle/aggregation — rather than a per-rule driver loop.
 
     Session-window rules (engine extension, rules.Rule window_type
-    "session") take a second branch over the same fan-out: Spark's
-    session-merge aggregation needs its own exec, so the plan unions the
-    epoch-arithmetic branch with a `session_window` branch. The branch is
-    added ONLY when the compacted changelog actually contains a session
-    rule — the rule list is query configuration (driver-side, not data), so
-    inspecting it costs nothing and every session-free plan stays
-    byte-identical to before.
+    "session") take a second branch over the same fan-out: the streaming
+    paths' session fold (operators.windows.fold_sessions) over
+    second-truncated event times, gated against the broadcast rule
+    config. It is added ONLY when the compacted changelog contains a
+    session rule, so every session-free plan stays byte-identical to
+    before.
     """
     active = compact_rule_list(rules)
-    fanned = fanout_rules(metrics, rules_df(spark, active))
-    has_session = any(r.window_type == "session" for r in active)
-    if not has_session:
+    table = rules_df(spark, active)
+    fanned = fanout_rules(metrics, table)
+    if not any(r.window_type == "session" for r in active):
         return evaluate_windows(fanned)
-    from flink_cep_task_spark.operators.windows import evaluate_session_windows
-
-    sess = evaluate_session_windows(fanned.filter(F.col("window_type") == "session"))
-    rest_rules = [r for r in active if r.window_type != "session"]
-    if not rest_rules:
+    config = F.broadcast(table.select("rule_id", "agg_type", "limit_op", "limit"))
+    sess = gate_windows(fold_sessions(
+        fanned.withColumn("event_time", F.date_trunc("second", "event_time"))
+    ).join(config, "rule_id"))
+    if all(r.window_type == "session" for r in active):
         return sess
     rest = evaluate_windows(fanned.filter(F.col("window_type") != "session"))
     return rest.unionByName(sess)

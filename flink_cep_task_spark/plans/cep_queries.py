@@ -370,10 +370,9 @@ def q_streaming_windows(
         spark, os.path.join(work, "src"), METRIC_SCHEMA,
         max_files_per_trigger=files_per_trigger or (n_parts + 1),
     )
-    # one tumbling + one sliding spec share the ONE window fold
-    # (operators.windows.fold_windows) that the live path also runs over
-    # the full rule matrix; here the rules are static and the gate reads
-    # them from a broadcast table.
+    # one tumbling + one sliding spec share the ONE stream builder
+    # (streaming/live.cep_streams) that the live path also runs over the
+    # full rule matrix; here the rule table is static.
     windowed, global_s = build_streaming_cep(
         metrics, spark, NATIVE_STREAMING_RULES, watermark="1 minute"
     )
@@ -387,8 +386,8 @@ def q_streaming_windows(
 def q_global_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING parity query #3 — GLOBAL-window rules through the LIVE
     update-mode path (run_live_cep_global): running per-(rule, group)
-    aggregates gated in foreachBatch against the freshly-read rule store.
-    Each micro-batch's gated UPDATE rows append to a parquet sink table
+    aggregates gated in the plan against the rule store, re-read every
+    micro-batch. Each micro-batch's gated UPDATE rows append to a parquet sink table
     stamped with the batch id; the last-update-per-key compaction is a
     max_by(batch_id) read-back query, so nothing accumulates in driver
     memory (group cardinality is unbounded at scale — a driver dict would

@@ -1266,6 +1266,22 @@ def _hadoop_path(jvm, path: str):
     return jvm.org.apache.hadoop.fs.Path(path)
 
 
+def _executor_reachable(uri: str) -> bool:
+    """True when _fork_store's executor copier can open `uri`: a local
+    path, or a scheme pyarrow.fs has a handler for."""
+    from urllib.parse import urlparse
+
+    if urlparse(uri).scheme in ("", "file"):
+        return True
+    try:
+        import pyarrow.fs as pafs
+
+        pafs.FileSystem.from_uri(uri)
+        return True
+    except Exception:
+        return False
+
+
 def _fork_store(spark: SparkSession, src: str, dst: str) -> str:
     """Copy one store directory. The FS substrate is the Hadoop FS API
     every lifecycle job in this module shares (listing, mkdirs, the
@@ -1285,8 +1301,9 @@ def _fork_store(spark: SparkSession, src: str, dst: str) -> str:
     bandwidth saturates. Files are sliced round-robin by descending size
     so one giant file cannot straggle behind a slice of slivers.
     Executors copy via OS sendfile (local) or pyarrow.fs (URI schemes);
-    if neither side is executor-reachable (exotic scheme without a
-    pyarrow handler), the driver-side copy is kept — correctness first.
+    if either side is not executor-reachable (exotic scheme without a
+    pyarrow handler), or `src` is a single file, the driver-side copy is
+    kept — correctness first.
     Returns the mode used ('driver' | 'distributed') so tests can pin
     the gate."""
     sc = spark.sparkContext
@@ -1299,7 +1316,8 @@ def _fork_store(spark: SparkSession, src: str, dst: str) -> str:
 
     # metadata-only recursive walk (files + dirs, so empty partition
     # dirs — retired-epoch placeholders — survive the fork)
-    root = sfs.getFileStatus(sp).getPath().toString()
+    src_st = sfs.getFileStatus(sp)
+    root = src_st.getPath().toString()
     files: list[tuple[str, int]] = []
     dirs: list[str] = []
     stack = [sp]
@@ -1314,34 +1332,24 @@ def _fork_store(spark: SparkSession, src: str, dst: str) -> str:
                 files.append((rel, st.getLen()))
 
     total_bytes = sum(ln for _, ln in files)
+    # decided before dst is created: FileUtil.copy nests the copy in an
+    # existing directory dst, at dst/<basename(src)>
     if (
-        len(files) < _FORK_DISTRIBUTE_MIN_FILES
-        and total_bytes < _FORK_DISTRIBUTE_MIN_BYTES
+        not src_st.isDirectory()
+        or (
+            len(files) < _FORK_DISTRIBUTE_MIN_FILES
+            and total_bytes < _FORK_DISTRIBUTE_MIN_BYTES
+        )
+        or not (
+            _executor_reachable(root)
+            and _executor_reachable(dfs.makeQualified(dp).toString())
+        )
     ):
         jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp, False, conf)
         return "driver"
 
-    def _executor_reachable(uri: str) -> bool:
-        from urllib.parse import urlparse
-
-        if urlparse(uri).scheme in ("", "file"):
-            return True
-        try:
-            import pyarrow.fs as pafs
-
-            pafs.FileSystem.from_uri(uri)
-            return True
-        except Exception:
-            return False
-
-    droot = dfs.getFileStatus(dp).getPath().toString() if dfs.exists(dp) else None
-    if droot is None:
-        dfs.mkdirs(dp)
-        droot = dfs.getFileStatus(dp).getPath().toString()
-    if not (_executor_reachable(root) and _executor_reachable(droot)):
-        jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp, False, conf)
-        return "driver"
-
+    dfs.mkdirs(dp)
+    droot = dfs.getFileStatus(dp).getPath().toString()
     for rel in dirs:  # metadata-only; preserves empty dirs
         dfs.mkdirs(jvm.org.apache.hadoop.fs.Path(droot + "/" + rel))
 

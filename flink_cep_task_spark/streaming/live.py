@@ -52,6 +52,10 @@ closes. Spark filters late rows ahead of the fold and counts them
 not past the PREVIOUS batch's watermark, so a row up to one batch late
 still counts, as in the batch oracle, and no window fires twice.
 
+One stream builder, cep_streams, serves every streaming surface, which
+differ only in the rule table they pass (the store read here, a static
+table in streaming/pipeline.build_streaming_cep).
+
 Scale: state is hash-partitioned by (rule, group, window) on the JVM
 state store, one row per open window; the rule table is KBs and
 broadcast (once to the fan-out, once to the gate).
@@ -80,6 +84,7 @@ from flink_cep_task_spark.rules import WIRE_NAMES, Rule
 from flink_cep_task_spark.schemas import RULE_SCHEMA
 
 SECONDS_PER_MINUTE = 60
+DEFAULT_WATERMARK = "10 minutes"
 # the live engine's output rows (gate_windows), as its sinks read them back
 LIVE_OUTPUT_SCHEMA = (
     "rule_id INT, group_id STRING, window_start LONG, window_end LONG, "
@@ -175,44 +180,29 @@ def fanout_live(metrics: DataFrame, rules: DataFrame, watermark: str) -> DataFra
     return fanout_rules(wm, rules)
 
 
-def build_live_cep(
-    metrics: DataFrame,
-    spark: SparkSession,
-    rule_store_path: str,
-    watermark: str = "10 minutes",
-    state_buckets: int | None = None,  # ignored; perfbench/stream.py still passes it
-) -> DataFrame:
-    """Full live pipeline: metric stream × per-batch-refreshed rule table →
-    window fold → gate. Output schema matches the batch engine
-    (LIVE_OUTPUT_SCHEMA = gate_windows' output), so streaming results are
-    directly comparable.
+def cep_streams(
+    metrics: DataFrame, rules: DataFrame, watermark: str
+) -> tuple[DataFrame, DataFrame]:
+    """(windowed, global) CEP streams of a Metric stream against a rule
+    table (RULE_SCHEMA, one row per rule_id), rows in gate_windows'
+    schema. Fan-out and gate read `rules` in the same plan, so over the
+    store (rules_from_store) both follow every change at the next
+    micro-batch.
 
-    Both the fan-out and the gate read the store's ACTIVE rules in the
-    same plan, re-read every micro-batch. The gate inner-joins each
-    closed window's partials with its rule's CURRENT version and emits
-    the window only if that version still defines a window of the same
-    shape — tumbling/sliding: the same size and a start aligned to the
-    current slide; session: the same gap — so a window closed after a
-    delete, pause or resize emits nothing, and one closed after a
-    re-limit or re-aggregate is gated with the new config.
+    windowed (append mode): tumbling/sliding rules fold in fold_windows;
+    a closed window's config-free partials join the rule's CURRENT
+    ACTIVE version and pass only if it still defines that shape (same
+    size and a start on the current slide grid; for sessions, the same
+    gap), so a delete, pause or resize drops the window and a re-limit
+    or re-aggregate re-gates it. Session rules share ONE fold_sessions
+    branch, built only if the table holds a session rule (ACTIVE or
+    PAUSE) at build time — every branch scans the source once more per
+    batch; the window branch is always built.
 
-    Tumbling/sliding rules go through operators.windows.fold_windows, one
-    native streaming aggregation whose window size is a column: a rule
-    added or resized mid-run applies from the next batch. Session rules
-    go through ONE F.session_window branch whose gap is read per row
-    (operators.windows.fold_sessions), so a session rule upserted
-    mid-run with a new gap is served too — but the branch is only built
-    if the store holds a session rule (ACTIVE or PAUSE) at build time; a
-    store with none needs a restart before its first session rule
-    applies. Global-window rules (unbounded, never fire in append mode —
-    reference quirk Q5) run through run_live_cep_global's update-mode
-    path instead.
-
-    The state is Spark's own aggregation state, one row per open window;
-    its layout differs from that of every earlier version, so a live
-    query must start from a fresh checkpointLocation after an upgrade —
-    older live checkpoints cannot be resumed."""
-    rules = rules_from_store(spark, rule_store_path)
+    global (update mode): running partials of global-window rules (no
+    window end — reference quirk Q5) keyed by (rule_id, group_id) only
+    and joined to the current global rules, so a config change re-gates
+    the SAME running aggregate; window bounds are NULL."""
     active = rules.filter(F.col("rule_state") == "ACTIVE")
     fanned = fanout_live(metrics, active, watermark)
     current = F.broadcast(active.select(
@@ -227,23 +217,51 @@ def build_live_cep(
         .otherwise(F.col("window_minutes")).cast("long")
         * SECONDS_PER_MINUTE
     )
-    out = gate_windows(
+    windowed = gate_windows(
         fold_windows(fanned).join(current, "rule_id").filter(
             F.col("window_type").isin("tumbling", "sliding")
             & (F.col("window_end") - F.col("window_start") == size_s)
             & (F.pmod(F.col("window_start"), slide_s) == 0)
         )
     )
-    # every branch scans the source once more per batch, so the session
-    # branch is only built when the store holds a session rule
     if rules.filter(F.col("window_type") == "session").take(1):
-        out = out.unionByName(gate_windows(
+        windowed = windowed.unionByName(gate_windows(
             fold_sessions(fanned).join(current, "rule_id").filter(
                 (F.col("window_type") == "session")
                 & (F.col("window_minutes") == F.col("__gap"))
             )
         ))
-    return out
+    global_ = gate_windows(
+        fanned.filter(F.col("window_type") == "global")
+        .groupBy("rule_id", "group_id").agg(*partial_aggs())
+        .join(current.filter(F.col("window_type") == "global"), "rule_id")
+        .withColumns({
+            "window_start": F.lit(None).cast("long"),
+            "window_end": F.lit(None).cast("long"),
+        })
+    )
+    return windowed, global_
+
+
+def build_live_cep(
+    metrics: DataFrame,
+    spark: SparkSession,
+    rule_store_path: str,
+    watermark: str = DEFAULT_WATERMARK,
+    state_buckets: int | None = None,  # ignored; perfbench/stream.py still passes it
+) -> DataFrame:
+    """Full live pipeline: the windowed stream of cep_streams over the
+    rule store (rules_from_store), whose fan-out and gate re-read the
+    store's current rules every micro-batch. A store with no session
+    rule at build time needs a restart before its first session rule
+    applies. Global-window rules never fire in append mode (reference
+    quirk Q5); run_live_cep_global serves them.
+
+    The state is Spark's own aggregation state, one row per open window;
+    its layout differs from that of every earlier version, so a live
+    query must start from a fresh checkpointLocation after an upgrade —
+    older live checkpoints cannot be resumed."""
+    return cep_streams(metrics, rules_from_store(spark, rule_store_path), watermark)[0]
 
 
 def run_live_cep_global(
@@ -254,43 +272,16 @@ def run_live_cep_global(
     checkpoint_dir: str,
     trigger: dict | None = None,
 ):
-    """Global-window rules, LIVE: running per-(rule, group) aggregates in
-    UPDATE mode (reference AllWindowAssigner windows never end — quirk Q5 —
-    so results are continuous, not fired), gated in foreachBatch against a
-    FRESH read of the rule store's ACTIVE global rules — rule upserts
-    change both matching (in-plan fan-out) and gating (sink side) at the
-    next micro-batch.
-
-    State is keyed by (rule_id, group_id) ONLY — limit/agg config stays out
-    of the grouping key, so a mid-run config change re-gates the SAME
-    running aggregate instead of splitting its state.
-
-    `sink(batch_df, batch_id)` receives gated rows with the engine's
-    standard output schema (window bounds NULL for global windows).
-    """
-    fanned = fanout_rules(metrics, rules_from_store(spark, rule_store_path))
-    agg = (
-        fanned.filter(F.col("window_type") == "global")
-        .groupBy("rule_id", "group_id")
-        .agg(*partial_aggs())
-    )
-
-    def gate(batch_df, batch_id: int) -> None:
-        # fresh read — foreachBatch runs driver-side, so the store's file
-        # listing is NOT frozen at plan time here
-        current = rules_from_store(spark, rule_store_path).filter(
-            (F.col("rule_state") == "ACTIVE") & (F.col("window_type") == "global")
-        ).select("rule_id", "agg_type", "limit_op", "limit")
-        sink(gate_windows(
-            batch_df.join(F.broadcast(current), "rule_id").withColumns({
-                "window_start": F.lit(None).cast("long"),
-                "window_end": F.lit(None).cast("long"),
-            })
-        ), batch_id)
-
+    """Global-window rules, LIVE: the global stream of cep_streams over
+    the rule store, started in UPDATE mode — a rule upsert changes both
+    matching and gating at the next micro-batch, since both re-read the
+    store in the plan. `sink(batch_df, batch_id)` receives the gated
+    rows (window bounds NULL). Returns the started query."""
+    rules = rules_from_store(spark, rule_store_path)
     q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(gate)
+        cep_streams(metrics, rules, DEFAULT_WATERMARK)[1]
+        .writeStream.outputMode("update")
+        .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger:

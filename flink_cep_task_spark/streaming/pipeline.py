@@ -22,10 +22,11 @@ Window sizes are rule data, so windows are assigned as data
 (operators.windows.assign_windows) and every tumbling/sliding rule shares
 ONE stateful aggregation (operators.windows.fold_windows) that the
 watermark evicts at each window's end; every session rule shares ONE
-F.session_window branch with a per-row gap (fold_sessions). Both are
-config-free and gated against the static rule table (gate_windows), and
-they union into a single append-mode stream — the same folds the live
-engine (streaming/live.py) runs. Global-window rules (no window end —
+F.session_window branch with a per-row gap (fold_sessions).
+build_streaming_cep is the live engine's stream builder
+(streaming/live.cep_streams) over a static rule table: the same folds,
+gated against the table's rules in the plan (gate_windows), unioned into
+a single append-mode stream. Global-window rules (no window end —
 reference AllWindowAssigner never fires, Q5) become a separate
 UPDATE-mode aggregation that emits per batch.
 
@@ -36,22 +37,12 @@ driver-side loops anywhere.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_cep_task_spark.operators.windows import (
-    fold_sessions,
-    fold_windows,
-    gate_windows,
-    partial_aggs,
-)
 from flink_cep_task_spark.rules import Rule, compact_rule_list, rules_df
 from flink_cep_task_spark.sources.jsonline import parse_metric_lines
-from flink_cep_task_spark.streaming.live import fanout_live
-
-DEFAULT_WATERMARK = "10 minutes"
+from flink_cep_task_spark.streaming.live import DEFAULT_WATERMARK, cep_streams
 
 
 def metrics_stream_from_text(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -222,42 +213,24 @@ def build_streaming_cep(
     rules: list[Rule],
     watermark: str = DEFAULT_WATERMARK,
 ) -> tuple[DataFrame | None, DataFrame | None]:
-    """(windowed_stream, global_stream) from a streaming Metric DataFrame.
+    """(windowed_stream, global_stream) from a streaming Metric DataFrame:
+    live.cep_streams over the static, compacted rule table.
 
     windowed_stream: append-mode; one row per closed (rule, group, window)
     passing its threshold, schema identical to the batch engine's output.
     global_stream: update-mode running aggregates for global-window rules.
-    Either is None when no rule of its kind is active.
+    Either is None when no rule of its kind is active. The window branch
+    is built whenever the windowed stream is, so a rule list of session
+    rules only also runs an empty window fold, and every micro-batch
+    scans the source once per branch.
     """
     active = compact_rule_list(rules)
-    table = rules_df(spark, active)
-    fanned = fanout_live(metrics, table, watermark)
+    windowed, global_ = cep_streams(metrics, rules_df(spark, active), watermark)
     kinds = {r.window_type for r in active}
-
-    # every branch scans the source once more per batch, so each is only
-    # built when a rule of its kind is active
-    parts = []
-    if kinds & {"tumbling", "sliding"}:
-        parts.append(fold_windows(fanned))
-    if "session" in kinds:
-        parts.append(fold_sessions(fanned).drop("__gap"))
-    windowed = None
-    if parts:
-        config = F.broadcast(table.select("rule_id", "agg_type", "limit_op", "limit"))
-        windowed = gate_windows(reduce(DataFrame.unionByName, parts).join(config, "rule_id"))
-
-    global_part = None
-    if "global" in kinds:
-        global_part = gate_windows(
-            fanned.filter(F.col("window_type") == "global")
-            .groupBy("rule_id", "group_id", "agg_type", "limit_op", "limit")
-            .agg(*partial_aggs())
-            .withColumns({
-                "window_start": F.lit(None).cast("long"),
-                "window_end": F.lit(None).cast("long"),
-            })
-        )
-    return windowed, global_part
+    return (
+        windowed if kinds - {"global"} else None,
+        global_ if "global" in kinds else None,
+    )
 
 
 # StreamingQueryProgress of the most recently drained stream (filled by

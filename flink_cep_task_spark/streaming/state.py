@@ -140,14 +140,15 @@ def streaming_first_event_tumbling(
     State per group: (t0, open windows' starts + partial sums/counts).
     A window emits exactly when the event-time WATERMARK passes its end
     (in-batch via the close scan, across batches via EventTimeTimeout).
-    Spark does NOT filter sub-watermark rows ahead of a stateful operator
-    (measured — see streaming/live.py), so the operator itself discards a
-    row whose window end precedes the current watermark: that window
-    already fired, and merging the late row would resurrect it and
-    double-emit. Event-time timeouts advance only with data, so a drained
-    availableNow source reaches a terminal state (a processing-time
-    timeout here would re-arm a wall-clock timer every invocation and
-    spin forever).
+    Spark drops rows ahead of this EventTimeTimeout operator only against
+    the PREVIOUS batch's watermark (numRowsDroppedByWatermark; measured
+    in tests/test_streaming.py's late-row scenario), so a row whose
+    window the CURRENT watermark closes still reaches `update`, and the
+    operator discards it itself: that window already fired, and merging
+    the late row would resurrect it and double-emit. Event-time timeouts
+    advance only with data, so a drained availableNow source reaches a
+    terminal state (a processing-time timeout here would re-arm a
+    wall-clock timer every invocation and spin forever).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

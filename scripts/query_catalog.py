@@ -25,7 +25,8 @@ def first_sentence(doc: str | None) -> str:
     return s if len(s) <= 220 else s[:217] + "..."
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's content, from the registry and plan docstrings."""
     from flink_cep_task_spark.registry import DRIVER_GATE_CAP, all_queries
 
     queries = all_queries()
@@ -51,12 +52,17 @@ def main() -> None:
                     break
         gate = "driver" if i < DRIVER_GATE_CAP else "local"
         lines.append(f"| {i + 1} | `{name}` | {gate} | {first_sentence(target.__doc__)} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md"
     )
+    text = render()
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"QUERIES.md written ({len(queries)} entries)")
+        fh.write(text)
+    print("QUERIES.md written")
 
 
 if __name__ == "__main__":

@@ -340,9 +340,10 @@ def test_tumbling_rule_ignores_its_slide(spark, tmp_path):
 
 def test_live_global_rules_update_mode(spark, tmp_path):
     """Global-window rules through the LIVE path: running aggregates in
-    update mode, threshold gated in foreachBatch against the freshly-read
-    rule store — a mid-run limit change re-gates the SAME running
-    aggregate (state is keyed without config columns)."""
+    update mode, threshold gated in the plan against the rule store
+    re-read every micro-batch — a mid-run limit change re-gates the SAME
+    running aggregate (state is keyed without config columns), and a
+    delete stops every emission."""
     from flink_cep_task_spark.streaming.live import run_live_cep_global
 
     base_ms = 1_700_000_040_000
@@ -391,22 +392,32 @@ def test_live_global_rules_update_mode(spark, tmp_path):
         n_before = len(seen)
         write_file(3, {"eventTime": base_ms + 180_000, "t_g": "g0", "m": 40})
         write_file(4, {"eventTime": base_ms + 240_000, "t_g": "g0", "m": 50})
-        deadline = time.time() + 60
-        # wait until both phase-B events were aggregated (any emission or
-        # quiet period after files consumed)
-        while time.time() < deadline:
-            prog = q.recentProgress
-            if sum(p["numInputRows"] for p in prog) >= 5:
-                time.sleep(2)  # let the last gated batch drain
-                break
-            time.sleep(0.5)
+
+        def drain(n_rows: int) -> None:
+            # wait until the first n_rows events were aggregated (any
+            # emission or quiet period after files consumed)
+            deadline = time.time() + 60
+            while time.time() < deadline:
+                if sum(p["numInputRows"] for p in q.recentProgress) >= n_rows:
+                    time.sleep(2)  # let the last gated batch drain
+                    return
+                time.sleep(0.5)
+            raise AssertionError(f"{n_rows} input rows not consumed in 60 s")
+
+        drain(5)
+        n_raised = len(seen)
+        # phase C: delete the rule; a value above every limit emits nothing
+        store.delete(3)
+        write_file(5, {"eventTime": base_ms + 300_000, "t_g": "g0", "m": 5000})
+        drain(6)
     finally:
         q.stop()
 
     # phase A emitted running maxima (limit 0); phase B values (40, 50)
     # exceed the old limit but NOT the new one — no emissions after upsert
     assert [v for *_k, v in seen[:n_before]] and max(v for *_k, v in seen[:n_before]) == 30.0
-    assert len(seen) == n_before, f"rows emitted past the raised limit: {seen[n_before:]}"
+    assert n_raised == n_before, f"rows emitted past the raised limit: {seen[n_before:]}"
+    assert len(seen) == n_raised, f"rows emitted after the delete: {seen[n_raised:]}"
 
 
 def test_rule_midstream_upsert_and_delete(spark, tmp_path):

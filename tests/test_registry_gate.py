@@ -8,6 +8,9 @@ registry."""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 from flink_cep_task_spark.registry import DRIVER_GATE_CAP, OVERFLOW_LAST, all_queries
 
 # queries that must stay inside the driver's gate: one per operator family
@@ -98,3 +101,17 @@ def test_overflow_queries_keep_their_oracle():
     for name in OVERFLOW_LAST:
         assert name in qs
         assert qs[name][1] is not None, f"{name} lost its oracle"
+
+
+def test_queries_md_is_current():
+    """QUERIES.md is generated from the registry and plan docstrings; a
+    registry or docstring change must regenerate it
+    (python scripts/query_catalog.py)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "query_catalog", os.path.join(root, "scripts", "query_catalog.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    with open(os.path.join(root, "QUERIES.md")) as fh:
+        assert mod.render() == fh.read()

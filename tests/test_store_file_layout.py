@@ -177,3 +177,31 @@ def test_fork_store_distributes_past_the_file_gate(spark, tmp_path):
     small_dst = tmp_path / "small_dst"
     assert dp._fork_store(spark, str(small_src), str(small_dst)) == "driver"
     assert _tree_manifest(small_dst) == _tree_manifest(small_src)
+
+
+def test_fork_store_unreachable_fallback_does_not_nest(spark, tmp_path, monkeypatch):
+    """Past the gates, a side the executors cannot reach falls back to
+    the driver copy — into dst itself, not dst/<basename(src)> (an
+    existing directory dst makes FileUtil.copy nest the copy)."""
+    from flink_cep_task_spark.plans import datapipe as dp
+
+    monkeypatch.setattr(dp, "_executor_reachable", lambda uri: False)
+    src, dst = tmp_path / "store_src", tmp_path / "store_dst"
+    for i in range(dp._FORK_DISTRIBUTE_MIN_FILES + 1):  # past the file gate
+        d = src / f"source=s{i % 3}"
+        d.mkdir(parents=True, exist_ok=True)
+        (d / f"part-{i:05d}.parquet").write_bytes(b"y" * (i + 1))
+    assert dp._fork_store(spark, str(src), str(dst)) == "driver"
+    assert _tree_manifest(dst) == _tree_manifest(src)
+
+
+def test_fork_store_single_file_past_the_byte_gate(spark, tmp_path, monkeypatch):
+    """A single-file src past the byte gate is copied onto dst as a file
+    (the distributed path would target the destination directory)."""
+    from flink_cep_task_spark.plans import datapipe as dp
+
+    monkeypatch.setattr(dp, "_FORK_DISTRIBUTE_MIN_BYTES", 1)
+    src, dst = tmp_path / "one.bin", tmp_path / "one_copy.bin"
+    src.write_bytes(bytes(range(256)) * 4)
+    dp._fork_store(spark, str(src), str(dst))
+    assert dst.read_bytes() == src.read_bytes()

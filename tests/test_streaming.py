@@ -217,9 +217,10 @@ def test_streaming_first_event_tumbling_state(spark, tmp_path):
 
 def test_streaming_first_event_tumbling_discards_late_rows(spark, tmp_path):
     """A row below the watermark whose window already fired must be
-    discarded, not resurrect the window (same semantics as the live
-    engine's late-row discard; Spark does not pre-filter late rows for
-    stateful operators)."""
+    discarded, not resurrect the window. Spark drops late rows ahead of
+    the operator only against the previous batch's watermark, and the
+    late row here arrives in the batch whose watermark fires its window,
+    so the operator's own discard is what keeps it out."""
     from flink_cep_task_spark.streaming.state import streaming_first_event_tumbling
 
     base = 1_700_000_000_000
