@@ -81,45 +81,37 @@ def assign_windows(fanned: DataFrame, ts_col: str = "event_time") -> DataFrame:
 
 
 def fold_windows(fanned: DataFrame) -> DataFrame:
-    """The streaming window fold: fanned rows of a stream watermarked on
-    `event_time` → one row of config-free partials (rule_id, group_id,
-    window_start, window_end, __sum, __cnt, __min, __max) per tumbling or
-    sliding (rule, group, window), emitted in append mode once the
+    """The window fold of every surface: fanned rows → config-free
+    partials (rule_id, group_id, window_start, window_end, __minutes,
+    __start, __sum, __cnt, __min, __max) per tumbling, sliding or session
+    (rule, group, window), emitted in append mode once the `event_time`
     watermark passes the window's end. Gate them with gate_windows.
 
-    Windows are assigned by assign_windows, so every window spec shares
-    one stateful aggregation. `__wend`, the window end as a timestamp,
-    carries the event-time metadata, so Spark evicts and emits each
-    window when the upstream watermark passes its end, and drops (and
-    counts in numRowsDroppedByWatermark) a row whose window end is not
-    past the previous batch's watermark. It is a column before the
-    groupBy: an alias inside the grouping is not an attribute, and
-    append mode then fails at start. Rows with a null measure fold
-    nothing (they still advance the watermark upstream)."""
+    ONE F.session_window folds every kind, its gap read per row from
+    `window_minutes`. A window is a session nothing can extend: a
+    tumbling or sliding row is stamped at its window's start (from
+    assign_windows) with the window size as gap, and start and size are
+    in the key (`__start`, `__minutes`), so its session is exactly
+    [start, start + size). A session row keeps its event time and a NULL
+    `__start`. Spark's late-row filter and eviction act on the session
+    end — a window row's window end: a row is dropped (and counted in
+    numRowsDroppedByWatermark) when that end is not past the previous
+    batch's watermark. Window rows with a null measure fold nothing;
+    session rows with one still shape their session, as in the oracle."""
+    kind = F.col("window_type")
     assigned = assign_windows(fanned.filter(
-        F.col("window_type").isin("tumbling", "sliding") & F.col("agg_input").isNotNull()
+        (kind == "session") | (kind.isin("tumbling", "sliding") & F.col("agg_input").isNotNull())
     ))
-    keyed = assigned.select(
-        "rule_id", "group_id", "window_start", "window_end", "agg_input",
-        F.timestamp_seconds("window_end").alias(
-            "__wend", metadata={"spark.watermarkDelayMs": 0}
-        ),
-    )
-    return keyed.groupBy(
-        "rule_id", "group_id", "window_start", "window_end", "__wend"
-    ).agg(*partial_aggs()).drop("__wend")
-
-
-def fold_sessions(fanned: DataFrame) -> DataFrame:
-    """The session fold of every surface (batch, native and live
-    streaming): one F.session_window over every session rule, its gap
-    read per row from `window_minutes` → config-free partials per
-    (rule, group, session), with the gap as `__gap`.
-    The gap is part of the key, so a rule whose gap changes starts new
-    sessions and the gate drops the old-gap ones."""
+    # the stamp keeps the watermark metadata: session_window takes its
+    # event-time marker from the time column
+    stamped = assigned.withColumn(
+        "event_time", F.coalesce(F.timestamp_seconds("window_start"), "event_time")
+    ).withMetadata("event_time", fanned.schema["event_time"].metadata)
     gap = F.concat(F.col("window_minutes").cast("string"), F.lit(" minutes"))
-    return fanned.filter(F.col("window_type") == "session").groupBy(
-        "rule_id", "group_id", F.col("window_minutes").alias("__gap"),
+    return stamped.groupBy(
+        "rule_id", "group_id",
+        F.col("window_minutes").alias("__minutes"),
+        F.col("window_start").alias("__start"),
         F.session_window("event_time", gap).alias("__w"),
     ).agg(*partial_aggs()).withColumns({
         "window_start": F.col("__w.start").cast("long"),

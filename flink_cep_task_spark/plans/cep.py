@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from flink_cep_task_spark.operators.fanout import fanout_rules
 from flink_cep_task_spark.operators.windows import (
     evaluate_windows,
-    fold_sessions,
+    fold_windows,
     gate_windows,
 )
 from flink_cep_task_spark.rules import (
@@ -48,10 +48,11 @@ def evaluate_rules(spark: SparkSession, metrics: DataFrame, rules: list[Rule]) -
 
     Session-window rules (engine extension, rules.Rule window_type
     "session") take a second branch over the same fan-out: the streaming
-    paths' session fold (operators.windows.fold_sessions) over
+    surfaces' one window fold (operators.windows.fold_windows) over their
     second-truncated event times, gated against the broadcast rule
     config. It is added ONLY when the compacted changelog contains a
-    session rule, so every session-free plan stays byte-identical to
+    session rule; tumbling, sliding and global rules stay on
+    evaluate_windows, so every session-free plan stays byte-identical to
     before.
     """
     active = compact_rule_list(rules)
@@ -60,12 +61,14 @@ def evaluate_rules(spark: SparkSession, metrics: DataFrame, rules: list[Rule]) -
     if not any(r.window_type == "session" for r in active):
         return evaluate_windows(fanned)
     config = F.broadcast(table.select("rule_id", "agg_type", "limit_op", "limit"))
-    sess = gate_windows(fold_sessions(
-        fanned.withColumn("event_time", F.date_trunc("second", "event_time"))
+    is_session = F.col("window_type") == "session"
+    sess = gate_windows(fold_windows(
+        fanned.filter(is_session)
+        .withColumn("event_time", F.date_trunc("second", "event_time"))
     ).join(config, "rule_id"))
     if all(r.window_type == "session" for r in active):
         return sess
-    rest = evaluate_windows(fanned.filter(F.col("window_type") != "session"))
+    rest = evaluate_windows(fanned.filter(~is_session))
     return rest.unionByName(sess)
 
 

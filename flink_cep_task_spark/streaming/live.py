@@ -35,22 +35,26 @@ Windowing: rules are data, so window sizes are COLUMNS — the built-in
 `F.window()` (literal durations) cannot express them. Windows are
 assigned as data by the batch engine's own arithmetic
 (operators.windows.assign_windows), and ONE native streaming aggregation
-(operators.windows.fold_windows) keeps per-(rule, group, window) partial
-aggregates (sum/cnt/min/max: O(1) state per window, never raw rows) in
-Spark's state store and closes a window exactly when the event-time
-watermark passes its end (the principled fix of the reference's
+(operators.windows.fold_windows; a window is a session of fixed bounds)
+keeps per-(rule, group, window) partial aggregates of every window type
+(sum/cnt/min/max: O(1) state per window, never raw rows) in Spark's
+state store and closes a window exactly when the event-time watermark
+passes its end (the principled fix of the reference's
 wall-clock Trigger, Q4; a data-driven fire would double-emit under
 in-watermark reordering). The state holds no rule config: every closed
 window's partials pass one stream-static join against the rule table of
 the closing micro-batch, which picks the aggregate, applies the threshold
 and rounds (operators.windows.gate_windows). A window is emitted only if
 its rule's current version is ACTIVE and still defines a window of that
-shape, so a delete, pause, re-limit, re-aggregate or resize applies to
-every window that closes after it — also one that only the watermark
-closes. Spark filters late rows ahead of the fold and counts them
+shape, so a delete, pause, re-limit, re-aggregate, resize or retype
+applies to every window that closes after it — also one that only the
+watermark closes. Spark filters late rows ahead of the fold and counts them
 (numRowsDroppedByWatermark): a row is dropped when its window's end is
 not past the PREVIOUS batch's watermark, so a row up to one batch late
-still counts, as in the batch oracle, and no window fires twice.
+still counts, as in the batch oracle, and no window fires twice. The
+plan has one shape whatever the rule table holds, so a rule of any
+window type may arrive mid-run, a restart resumes its checkpoint across
+any rule change, and each micro-batch reads its input once.
 
 One stream builder, cep_streams, serves every streaming surface, which
 differ only in the rule table they pass (the store read here, a static
@@ -75,7 +79,6 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
 from flink_cep_task_spark.operators.windows import (
-    fold_sessions,
     fold_windows,
     gate_windows,
     partial_aggs,
@@ -189,15 +192,13 @@ def cep_streams(
     store (rules_from_store) both follow every change at the next
     micro-batch.
 
-    windowed (append mode): tumbling/sliding rules fold in fold_windows;
+    windowed (append mode): every window type folds in ONE fold_windows;
     a closed window's config-free partials join the rule's CURRENT
-    ACTIVE version and pass only if it still defines that shape (same
-    size and a start on the current slide grid; for sessions, the same
-    gap), so a delete, pause or resize drops the window and a re-limit
-    or re-aggregate re-gates it. Session rules share ONE fold_sessions
-    branch, built only if the table holds a session rule (ACTIVE or
-    PAUSE) at build time — every branch scans the source once more per
-    batch; the window branch is always built.
+    ACTIVE version and pass only if it still defines that shape: the
+    same window_minutes, a session iff the fold's start key is NULL, and
+    otherwise a tumbling/sliding start on the current slide grid. A
+    delete, pause, resize or retype drops the window; a re-limit or
+    re-aggregate re-gates it. No branch depends on the table's content.
 
     global (update mode): running partials of global-window rules (no
     window end — reference quirk Q5) keyed by (rule_id, group_id) only
@@ -209,32 +210,27 @@ def cep_streams(
         "rule_id", "window_type", "window_minutes", "window_slide_minutes",
         "agg_type", "limit_op", "limit",
     ))
-    size_s = F.col("window_minutes").cast("long") * SECONDS_PER_MINUTE
+    kind = F.col("window_type")
     # a tumbling rule may carry a windowSlideMinute; like the window
     # assignment and the oracle, the gate ignores it (tumbling = size grid)
     slide_s = (
-        F.when(F.col("window_type") == "sliding", F.col("window_slide_minutes"))
+        F.when(kind == "sliding", F.col("window_slide_minutes"))
         .otherwise(F.col("window_minutes")).cast("long")
         * SECONDS_PER_MINUTE
     )
     windowed = gate_windows(
         fold_windows(fanned).join(current, "rule_id").filter(
-            F.col("window_type").isin("tumbling", "sliding")
-            & (F.col("window_end") - F.col("window_start") == size_s)
-            & (F.pmod(F.col("window_start"), slide_s) == 0)
+            (F.col("window_minutes") == F.col("__minutes"))
+            & F.when(F.col("__start").isNull(), kind == "session").otherwise(
+                kind.isin("tumbling", "sliding")
+                & (F.pmod(F.col("window_start"), slide_s) == 0)
+            )
         )
     )
-    if rules.filter(F.col("window_type") == "session").take(1):
-        windowed = windowed.unionByName(gate_windows(
-            fold_sessions(fanned).join(current, "rule_id").filter(
-                (F.col("window_type") == "session")
-                & (F.col("window_minutes") == F.col("__gap"))
-            )
-        ))
     global_ = gate_windows(
-        fanned.filter(F.col("window_type") == "global")
+        fanned.filter(kind == "global")
         .groupBy("rule_id", "group_id").agg(*partial_aggs())
-        .join(current.filter(F.col("window_type") == "global"), "rule_id")
+        .join(current.filter(kind == "global"), "rule_id")
         .withColumns({
             "window_start": F.lit(None).cast("long"),
             "window_end": F.lit(None).cast("long"),
@@ -252,12 +248,13 @@ def build_live_cep(
 ) -> DataFrame:
     """Full live pipeline: the windowed stream of cep_streams over the
     rule store (rules_from_store), whose fan-out and gate re-read the
-    store's current rules every micro-batch. A store with no session
-    rule at build time needs a restart before its first session rule
-    applies. Global-window rules never fire in append mode (reference
-    quirk Q5); run_live_cep_global serves them.
+    store's current rules every micro-batch, so a rule of any window type
+    upserted mid-run applies from the next micro-batch, and a restart
+    resumes its checkpoint across any rule change. Global-window rules
+    never fire in append mode (reference quirk Q5); run_live_cep_global
+    serves them.
 
-    The state is Spark's own aggregation state, one row per open window;
+    The state is Spark's session-window state, one row per open window;
     its layout differs from that of every earlier version, so a live
     query must start from a fresh checkpointLocation after an upgrade —
     older live checkpoints cannot be resumed."""

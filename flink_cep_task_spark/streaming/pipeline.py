@@ -19,14 +19,13 @@ Replaces the reference's runtime machinery 1:1 (SURVEY.md §3.3):
   restart strategy             → checkpointLocation (R1/R2)
 
 Window sizes are rule data, so windows are assigned as data
-(operators.windows.assign_windows) and every tumbling/sliding rule shares
-ONE stateful aggregation (operators.windows.fold_windows) that the
-watermark evicts at each window's end; every session rule shares ONE
-F.session_window branch with a per-row gap (fold_sessions).
-build_streaming_cep is the live engine's stream builder
-(streaming/live.cep_streams) over a static rule table: the same folds,
-gated against the table's rules in the plan (gate_windows), unioned into
-a single append-mode stream. Global-window rules (no window end —
+(operators.windows.assign_windows) and every tumbling, sliding and
+session rule shares ONE stateful aggregation (operators.windows.
+fold_windows, where a window is a session of fixed bounds) that the
+watermark evicts at each window's end. build_streaming_cep is the live
+engine's stream builder (streaming/live.cep_streams) over a static rule
+table: the same fold, gated against the table's rules in the plan
+(gate_windows), as one append-mode stream. Global-window rules (no window end —
 reference AllWindowAssigner never fires, Q5) become a separate
 UPDATE-mode aggregation that emits per batch.
 
@@ -219,10 +218,7 @@ def build_streaming_cep(
     windowed_stream: append-mode; one row per closed (rule, group, window)
     passing its threshold, schema identical to the batch engine's output.
     global_stream: update-mode running aggregates for global-window rules.
-    Either is None when no rule of its kind is active. The window branch
-    is built whenever the windowed stream is, so a rule list of session
-    rules only also runs an empty window fold, and every micro-batch
-    scans the source once per branch.
+    Either is None when no rule of its kind is active.
     """
     active = compact_rule_list(rules)
     windowed, global_ = cep_streams(metrics, rules_df(spark, active), watermark)

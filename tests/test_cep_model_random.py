@@ -4,7 +4,8 @@ missing measures, PAUSE/DELETE changelog entries) over seeded random
 schemaless metrics, compared row-for-row against an independent pure-
 Python evaluator written straight from the reference semantics
 (PartitionEngine.java isHit/getGroupId + the engine's documented epoch
-window arithmetic + SQL aggregate semantics + round_half_up).
+window arithmetic + gap-based session islands + SQL aggregate semantics
++ round_half_up).
 
 This is a THIRD implementation (beyond the Spark plan and the generated
 DuckDB oracles) exercising rule/tag/window combinations the fixture rule
@@ -35,6 +36,7 @@ def _model(events, rules):
     active = [r for r in latest.values() if r.rule_state == "ACTIVE"]
 
     cells: dict[tuple, list] = {}
+    sessions: dict[tuple, list] = {}  # (rule, group_id) → [(ts, value)]
     for ts_s, tags, measures in events:
         for r in active:
             if not set(r.grouping_keys) <= set(tags):
@@ -44,6 +46,9 @@ def _model(events, rules):
             else:
                 gid = str(r.rule_id)
             v = measures.get(r.agg_field)  # None ⇒ null input (ignored)
+            if r.window_type == "session":
+                sessions.setdefault((r, gid), []).append((ts_s, v))
+                continue
             size = (r.window_minutes or 0) * 60
             if r.window_type == "tumbling":
                 starts = [ts_s // size * size]
@@ -59,6 +64,21 @@ def _model(events, rules):
                 cells.setdefault(
                     (r.rule_id, gid, ws, we, r.agg_type, r.limit_op, r.limit), []
                 ).append(v)
+
+    # sessions: islands of the group's times, broken where the spacing
+    # exceeds the gap, with bounds [min, max + gap); a row with a null
+    # measure still shapes its island
+    for (r, gid), points in sessions.items():
+        gap = r.window_minutes * 60
+        points.sort(key=lambda p: p[0])
+        islands = [[points[0]]]
+        for p in points[1:]:
+            if p[0] - islands[-1][-1][0] > gap:
+                islands.append([])
+            islands[-1].append(p)
+        for isl in islands:
+            cells[(r.rule_id, gid, isl[0][0], isl[-1][0] + gap,
+                   r.agg_type, r.limit_op, r.limit)] = [v for _, v in isl]
 
     out = set()
     for (rid, gid, ws, we, agg, op, limit), vals in cells.items():
@@ -104,8 +124,10 @@ def test_random_rules_match_python_model(spark, seed):
         events.append((ts_s, tags, measures))
 
     rules = []
-    for rid in range(1, 11):
-        wt = rng.choice(["tumbling", "sliding", "global"])
+    for rid in range(1, 14):
+        # rules 11-13 are sessions, drawn after the others so that rules
+        # 1-10 keep their draws
+        wt = rng.choice(["tumbling", "sliding", "global"]) if rid <= 10 else "session"
         wm = rng.randint(1, 5)
         slide = rng.randint(1, 7) if wt == "sliding" else None
         keys = tuple(k for k in tagsets if rng.random() < 0.6)

@@ -186,7 +186,10 @@ OPEN_WINDOW_CHANGES = {
     "reagg": lambda store: store.upsert(
         {**OPEN_WINDOW_RULE, "aggregatorFunctionType": "MAX"}),
     "resize": lambda store: store.upsert({**OPEN_WINDOW_RULE, "windowMinutes": 2}),
+    "retype": lambda store: store.upsert({**OPEN_WINDOW_RULE, "windowType": "session"}),
 }
+# changes after which rule 2 no longer defines the open window's shape
+RESHAPES = {"resize", "retype"}
 
 
 @pytest.mark.parametrize("change", sorted(OPEN_WINDOW_CHANGES))
@@ -197,8 +200,9 @@ def test_rule_change_gates_window_closed_by_watermark_only(spark, tmp_path, chan
     data, only its timeout. The emitted rows must be the oracle's over
     the same events and the rule set in the store at that closing batch:
     nothing for a deleted or paused rule, the new limit's verdict, the
-    new aggregate. A resized rule no longer defines the old window, so
-    no row may carry its old bounds."""
+    new aggregate. A resized rule, or one turned into a session rule of
+    the same windowMinutes, no longer defines the old window, so no row
+    may carry its old bounds."""
     import duckdb
 
     from flink_cep_task_spark.oracle import cep_oracle_sql
@@ -251,7 +255,7 @@ def test_rule_change_gates_window_closed_by_watermark_only(spark, tmp_path, chan
         if FLUSH_TAG not in r.group_id
     )
     assert (1, "1_x", 0, 60, "SUM", 7.0) in got, got
-    if change == "resize":
+    if change in RESHAPES:
         assert not [r for r in got if r[0] == 2 and r[2:4] == (0, 60)], got
         return
     with open(store.path) as fh:
@@ -269,6 +273,36 @@ def test_rule_change_gates_window_closed_by_watermark_only(spark, tmp_path, chan
     )
     con.close()
     assert got == expected
+
+
+def test_live_plan_does_not_depend_on_the_store(spark, tmp_path):
+    """The live plan is built once and serves every later rule change,
+    so its shape must not depend on what the store holds when it is
+    built: the analyzed plans over stores of no rule, a tumbling rule, a
+    session rule and both are the same, up to expression and lambda
+    variable ids, the watermark node's id and the store's path. A
+    build-time branch on the store's content (a second fold, a union)
+    would make a restart after a rule change fail to resume its
+    checkpoint."""
+    import re
+
+    src = tmp_path / "plan_src"
+    src.mkdir()
+    tumbling = {**OPEN_WINDOW_RULE, "ruleId": 1}
+    session = {**OPEN_WINDOW_RULE, "ruleId": 2, "windowType": "session"}
+    plans = set()
+    for i, docs in enumerate([[], [tumbling], [session], [tumbling, session]]):
+        store = RuleFileStore(str(tmp_path / f"rules_{i}.json"))
+        for doc in docs:
+            store.upsert(doc)
+        metrics = metrics_stream_from_text(spark, str(src))
+        out = build_live_cep(metrics, spark, store.path)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        plans.add(re.sub(
+            r"#\d+|(?<=\blambda [xy])_\d+|\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b",
+            "#", plan.replace(store.path, "<store>"),
+        ))
+    assert len(plans) == 1, "\n\n".join(plans)
 
 
 def test_tumbling_rule_ignores_its_slide(spark, tmp_path):
@@ -928,10 +962,32 @@ def _oracle_window_starts(ts: int, wtype: str, size: int, slide: int) -> list[in
     ]
 
 
-def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
-    """One session branch serves every gap: a session rule whose gap no
-    stored rule had at build time, upserted while the query runs, emits
-    its sessions from the next batch on — no restart."""
+SESSION_RULE = {"windowType": "session", "groupingKeyNames": ["t_g"],
+                "aggregatorFunctionType": "SUM", "aggregateFieldName": "m",
+                "limitOperatorType": ">", "limit": 0}
+# the rule the store holds when the query is built, the gap of the session
+# rule 2 upserted mid-run, and the rows expected from both
+HELD_AT_BUILD = {
+    # rule 1 (2-min gap): seconds 0..240 → [0, 360); rule 2 (5-min gap,
+    # live from file 1 on): seconds 60..240 → [60, 540)
+    "session": ({**SESSION_RULE, "windowMinutes": 2}, 5,
+                [(1, 0, 360, 5.0), (2, 60, 540, 4.0)]),
+    # rule 1 (5-min tumbling): seconds 0..240 → [0, 300); rule 2 (2-min
+    # gap) is the store's first session rule: seconds 60..240 → [60, 360)
+    "tumbling": ({**SESSION_RULE, "windowType": "tumbling", "windowMinutes": 5}, 2,
+                 [(1, 0, 300, 5.0), (2, 60, 360, 4.0)]),
+}
+
+
+@pytest.mark.parametrize("held", sorted(HELD_AT_BUILD))
+def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path, held):
+    """One window fold serves every rule: a session rule whose gap no
+    stored rule had at build time — also when the store held no session
+    rule at all — upserted while the query runs, emits its sessions from
+    the next batch on, with no restart. The plan keeps one stateful
+    operator whatever the store holds, so every batch reads its input
+    rows once."""
+    held_rule, gap, expected = HELD_AT_BUILD[held]
     base_ms = 1_700_000_400_000  # 10-min epoch aligned
     mk = lambda sec: {"eventTime": base_ms + sec * 1000, "t_g": "g0", "m": 1}
     src = tmp_path / f"sgap-{uuid.uuid4().hex[:8]}"
@@ -943,11 +999,8 @@ def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
         p.write_text(json.dumps(doc))
         os.utime(p, (t0 + idx, t0 + idx))
 
-    session = {"windowType": "session", "groupingKeyNames": ["t_g"],
-               "aggregatorFunctionType": "SUM", "aggregateFieldName": "m",
-               "limitOperatorType": ">", "limit": 0}
     store = RuleFileStore(str(tmp_path / "rules_sgap.json"))
-    store.upsert({**session, "ruleId": 1, "windowMinutes": 2})
+    store.upsert({**held_rule, "ruleId": 1})
     write_file(0, mk(0))
 
     metrics = metrics_stream_from_text(spark, str(src), max_files_per_trigger=1)
@@ -960,7 +1013,7 @@ def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        store.upsert({**session, "ruleId": 2, "windowMinutes": 5})
+        store.upsert({**SESSION_RULE, "ruleId": 2, "windowMinutes": gap})
         for i, sec in enumerate([60, 120, 180, 240], start=1):
             write_file(i, mk(sec))
         # two pushers: the first moves the watermark past every session,
@@ -968,6 +1021,8 @@ def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
         write_file(5, {"eventTime": base_ms + 12_000_000, "t_g": FLUSH_TAG, "m": 0})
         write_file(6, {"eventTime": base_ms + 12_060_000, "t_g": FLUSH_TAG, "m": 0})
         q.processAllAvailable()
+        progress = [json.loads(p.json) if hasattr(p, "json") else p
+                    for p in q.recentProgress]
     finally:
         q.stop()
     base_s = base_ms // 1000
@@ -975,6 +1030,6 @@ def test_session_rule_with_new_gap_upserted_mid_run(spark, tmp_path):
         (r.rule_id, r.window_start - base_s, r.window_end - base_s, r.agg_value)
         for r in spark.table(name).collect() if FLUSH_TAG not in r.group_id
     )
-    # rule 1 (2-min gap): seconds 0..240 → [0, 360); rule 2 (5-min gap,
-    # live from file 1 on): seconds 60..240 → [60, 540)
-    assert got == [(1, 0, 360, 5.0), (2, 60, 540, 4.0)], got
+    assert got == expected, got
+    assert [len(p["stateOperators"]) for p in progress] == [1] * len(progress)
+    assert sum(p["numInputRows"] for p in progress) == 7, progress
