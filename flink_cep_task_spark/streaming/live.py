@@ -75,7 +75,6 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from flink_cep_task_spark.operators.fanout import fanout_rules
 from flink_cep_task_spark.operators.windows import (
@@ -83,8 +82,7 @@ from flink_cep_task_spark.operators.windows import (
     gate_windows,
     partial_aggs,
 )
-from flink_cep_task_spark.rules import WIRE_NAMES, Rule
-from flink_cep_task_spark.schemas import RULE_SCHEMA
+from flink_cep_task_spark.rules import Rule, decode_rules
 
 SECONDS_PER_MINUTE = 60
 DEFAULT_WATERMARK = "10 minutes"
@@ -141,30 +139,12 @@ class RuleFileStore:
         os.replace(tmp, self.path)
 
 
-# the store's documents as written by Rule.to_wire, typed like RULE_SCHEMA
-# except the limit, which the wire carries as its exact decimal string
-_STORED_RULES = ArrayType(
-    StructType([
-        StructField(WIRE_NAMES[f.name], StringType() if f.name == "limit" else f.dataType)
-        for f in RULE_SCHEMA.fields
-    ])
-)
-
-
 def rules_from_store(spark: SparkSession, path: str) -> DataFrame:
     """Static-side rule table: the store's current rules (one row per
-    rule_id, ACTIVE or PAUSE) — the single-line JSON array of validated
-    wire docs, read with one typed from_json, exploded and renamed to
-    RULE_SCHEMA. Re-executed (and the file re-READ) every micro-batch
-    when joined against a stream."""
-    docs = spark.read.text(path).select(
-        F.explode(F.from_json(F.col("value"), _STORED_RULES)).alias("r")
-    )
-    # the cast is a no-op for every column but the limit string
-    return docs.select(*[
-        F.col("r")[WIRE_NAMES[f.name]].cast(f.dataType).alias(f.name)
-        for f in RULE_SCHEMA.fields
-    ])
+    rule_id, ACTIVE or PAUSE) — its single-line JSON array of validated
+    wire docs through rules.decode_rules. Re-executed (and the file
+    re-READ) every micro-batch when joined against a stream."""
+    return decode_rules(spark.read.text(path))
 
 
 def fanout_live(metrics: DataFrame, rules: DataFrame, watermark: str) -> DataFrame:

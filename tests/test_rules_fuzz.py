@@ -3,7 +3,9 @@ mirroring tests/test_jsonline_fuzz.py for the rule channel. Rules are
 parsed by ONE parser, Rule.from_wire (via rules.parse_rule_lines), and
 validated once, when they enter the live engine's RuleFileStore; the
 plan then reads the stored canonical documents back as typed data
-(streaming.live.rules_from_store). The two sides pinned here are that
+(rules.decode_rules, the one decoder of the store's table,
+streaming.live.rules_from_store, and of the batch table, rules.rules_df).
+The two sides pinned here are that
 parse and the stored table: arbitrary byte soup must never crash the
 parser, the store must reject exactly the documents the parser drops,
 and the table read back must hold the current version of each accepted
@@ -32,6 +34,7 @@ from flink_cep_task_spark.rules import (
     compact_rule_list,
     compact_rules,
     parse_rule_lines,
+    rules_df,
 )
 from flink_cep_task_spark.schemas import AGG_TYPES, LIMIT_OPS, RULE_STATES
 from flink_cep_task_spark.streaming.live import RuleFileStore, rules_from_store
@@ -142,7 +145,9 @@ def test_wire_parser_twins_agree_and_never_crash(spark, tmp_path_factory, lines)
     """The parser never crashes; the store rejects a line exactly when
     the parser drops it; the stored table equals the latest non-deleted
     version per rule_id of the accepted documents (re-sequenced in write
-    order), and its compaction the compacted changelog."""
+    order), and its compaction the compacted changelog. The batch rule
+    table of those rules (rules_df) decodes to the same rows: one
+    decoder serves both."""
     parse_rule_lines(lines)
     store = RuleFileStore(str(tmp_path_factory.mktemp("fuzz") / "rules.json"))
     accepted = []
@@ -156,7 +161,9 @@ def test_wire_parser_twins_agree_and_never_crash(spark, tmp_path_factory, lines)
         assert parsed, line
         accepted.append(replace(parsed[0], seq=len(accepted) + 1))
     table = rules_from_store(spark, store.path)
-    assert sorted(map(_norm, table.collect())) == sorted(map(_norm, current_rules(accepted)))
+    current = sorted(map(_norm, current_rules(accepted)))
+    assert sorted(map(_norm, table.collect())) == current
+    assert sorted(map(_norm, rules_df(spark, current_rules(accepted)).collect())) == current
     got = compact_rules(table).filter("rule_state = 'ACTIVE'").collect()
     assert sorted(map(_norm, got)) == sorted(map(_norm, compact_rule_list(accepted)))
 

@@ -8,8 +8,6 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
-from flink_cep_task_spark.operators.fanout import fanout_rules
-from flink_cep_task_spark.operators.windows import assign_windows, evaluate_windows
 from flink_cep_task_spark.plans.cep import evaluate_rules
 from flink_cep_task_spark.rules import Rule
 from flink_cep_task_spark.schemas import METRIC_SCHEMA
